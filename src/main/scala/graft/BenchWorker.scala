@@ -4,30 +4,22 @@ import graft.pipeline.{Extract, ExtractConf}
 import graft.sources.Io
 import org.apache.spark.sql.SparkSession
 
-/** Child JVM for one scaling measurement: read the pre-materialized parquet
-  * corpus, run the extraction pipeline at `local[cores]`, print the rate.
+/** Child JVM for one `Bench` leg: extract the warm corpus once (JIT warm-up;
+  * every child is a fresh JVM), then time the main corpus at
+  * `local[cores]` and print exactly one line, `RATE <docs/sec>`.
   *
-  * Launched by `Bench` under `taskset -c 0..cores-1` so the WHOLE JVM —
-  * executor threads, GC threads, JIT — is confined to the advertised core
-  * count, like a real N-core executor host would be. (Without pinning, a
-  * `local[8]` JVM on a 32-core box runs its ~23 GC threads and the JIT on
-  * the idle cores, inflating the low-parallelism rate and understating
-  * scaling efficiency.)
+  * `Bench` launches it under `taskset -c 0..cores-1`, so executor threads,
+  * GC and JIT all share the advertised cores, as on a real N-core executor.
+  * The corpora are parquet written by `Bench` outside the timing; a run
+  * covers scan → skew probe → extract (shuffle-free common path plus the
+  * salted mega-doc path) → noop sink.
   *
-  * The corpus is parquet on disk (written once by Bench, outside timing):
-  * the measurement covers scan → range shuffle → extract → sink, the real
-  * pipeline shape — not synthetic-data generation.
-  *
-  * Prints exactly one line: `RATE <docs/sec>`.
+  * Usage: BenchWorker <cores> <warmCorpus> <mainCorpus> <mainDocs>
   */
 object BenchWorker {
   def main(args: Array[String]): Unit = {
-    val (coresS, warmPath, mainPath, numDocsS, reps) = args match {
-      case Array(c, w, m, n) => (c, w, m, n, 1)
-      case Array(c, w, m, n, r) => (c, w, m, n, r.toInt)
-    }
+    val Array(coresS, warmPath, mainPath, numDocsS) = args
     val cores = coresS.toInt
-    val numDocs = numDocsS.toInt
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-worker-$cores")
@@ -42,16 +34,10 @@ object BenchWorker {
     def run(path: String): Unit =
       Extract.extractDS(spark, Io().readDocs(spark, path), conf = conf)
         .write.format("noop").mode("overwrite").save()
-    run(warmPath) // cold-JVM JIT warmup (every child is a fresh JVM)
-    // reps > 1 (the calibration PROBE path): best of `reps` runs — a short
-    // probe's single run is scheduler-noise-dominated (±25% measured on a
-    // 2 s region); the max over a few runs is a stable entitlement signal
-    val rate = (0 until reps).map { _ =>
-      val t0 = System.nanoTime()
-      run(mainPath)
-      numDocs / ((System.nanoTime() - t0) / 1e9)
-    }.max
-    println(f"RATE $rate%.1f")
+    run(warmPath)
+    val t0 = System.nanoTime()
+    run(mainPath)
+    println(f"RATE ${numDocsS.toInt / ((System.nanoTime() - t0) / 1e9)}%.1f")
     spark.stop()
     sys.exit(0)
   }

@@ -71,6 +71,16 @@ object LangDetect {
     out
   }
 
+  // score slots the script-range tests assign (main.py:141-151)
+  private def langIdx(lang: String): Int = {
+    val idx = langs.indexOf(lang)
+    require(idx >= 0, s"$lang missing from langs")
+    idx
+  }
+  private val chineseIdx = langIdx("chinese")
+  private val arabicIdx = langIdx("arabic")
+  private val russianIdx = langIdx("russian")
+
   def detect(text: String): String = {
     val t = if (text == null) "" else text
     val sample = (if (t.length > 1000) t.substring(0, 1000) else t)
@@ -114,9 +124,9 @@ object LangDetect {
       else if (c >= 'Ѐ' && c <= 'ӿ') cyrillic = true               // main.py:149-151
       i += 1
     }
-    if (cjk) scores(6) = 10
-    if (arabic) scores(7) = 10
-    if (cyrillic) scores(8) = 10
+    if (cjk) scores(chineseIdx) = 10
+    if (arabic) scores(arabicIdx) = 10
+    if (cyrillic) scores(russianIdx) = 10
 
     var best = 0                                                   // first max in insertion order,
     var li = 1                                                     // matching Python max() (main.py:154-158)

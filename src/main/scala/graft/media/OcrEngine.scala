@@ -42,24 +42,6 @@ object DeterministicOcr extends OcrEngine {
   }
 }
 
-/** Production engine skeleton: Tesseract via JNI (tess4j-style), one native
-  * `TessBaseAPI` per partition, batched page handoff. Compiled but unused in
-  * the sandbox (no tesseract binary / native lib here — Dockerfile:1-26 of
-  * the reference installs tesseract-ocr + 11 language packs for prod). The
-  * pipeline depends only on the `OcrEngine` trait, so swapping this in
-  * touches no pipeline code (SURVEY.md §7.4).
-  */
-final class TesseractJniOcr(langs: String = "eng") extends OcrEngine {
-  @transient private lazy val api: AnyRef =
-    throw new UnsupportedOperationException(
-      "TesseractJniOcr requires the tesseract native library (prod image only); " +
-      "use DeterministicOcr in the sandbox")
-  override def recognize(media: PageMedia, passIdx: Int): String = {
-    val _ = api
-    throw new IllegalStateException("unreachable")
-  }
-}
-
 /** EXECUTABLE production engine: the `tesseract` CLI binary, exactly the
   * process boundary the reference uses (`pytesseract.image_to_string` is a
   * subprocess wrapper around the same binary — `main.py:229,655,678`), with

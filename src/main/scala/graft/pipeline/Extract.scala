@@ -22,7 +22,7 @@ import org.apache.spark.util.CollectionAccumulator
   *               → flatMap(salted page-range WorkUnits)   // to row-group
   *               → repartition(doc_id, salt)              // skipping
   *               → mapPartitions(kernel) → groupByKey(doc_id) → merge
-  * union → observe(metrics) → idempotent append
+  * union → idempotent append
   * }}}
   *
   * Scale properties:
@@ -258,13 +258,8 @@ object Extract {
     val acc = new CollectionAccumulator[LineageRow]
     spark.sparkContext.register(acc, "lineage")
 
-    val out = extractDS(spark, accepted, store, engine, conf, Some(acc))
-      .observe("extract_metrics",
-        count(lit(1)).as("docs"),
-        sum(size(col("spans"))).as("span_count"),
-        sum(col("character_count")).as("byte_count"))
-
-    out.write.mode(SaveMode.Append).parquet(outPath)
+    extractDS(spark, accepted, store, engine, conf, Some(acc))
+      .write.mode(SaveMode.Append).parquet(outPath)
 
     val lineage = {
       import scala.jdk.CollectionConverters._
