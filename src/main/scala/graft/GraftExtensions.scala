@@ -1,7 +1,11 @@
 package graft
 
-import graft.functions.{DotF, LangDetectExpr, MinHashSigs, QClean, ShingleSet, SimHash64, SimRatio, SortedIntersectCount}
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.Native
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.NativeCall
+import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
 
 /** SparkSessionExtensions entry point — registers the engine's native
   * expressions as SQL functions so any session (including plain
@@ -15,72 +19,47 @@ import org.apache.spark.sql.SparkSessionExtensions
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("qclean"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.QClean", "qclean"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => QClean(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lang_detect"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.LangDetectExpr", "lang_detect"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => LangDetectExpr(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.SimHash64", "simhash64"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SimHash64(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sim_ratio"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.SimRatio", "sim_ratio"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SimRatio(args(0), args(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("dot_f"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.DotF", "dot_f"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => DotF(args(0), args(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.MinHashSigs", "minhash_sigs"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // numPerms must be a foldable integer — a clean analysis error beats
-        // the opaque ClassCastException a bare eval().asInstanceOf would
-        // throw on a column reference / BIGINT / string second argument
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-        val n = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case Literal(v: Short, ShortType) => v.toInt
-          case Literal(v: Byte, ByteType) => v.toInt
-          // the builder runs BEFORE ConstantFolding, so `2+2` or
-          // `CAST(4 AS INT)` arrive as foldable non-Literals — evaluate
-          // them rather than rejecting working SQL
-          case other if other.foldable &&
-              (other.dataType == IntegerType || other.dataType == ShortType ||
-               other.dataType == ByteType) =>
-            // eval() of a foldable can itself throw under ANSI (e.g.
-            // CAST('abc' AS INT)) — keep the clean analysis error
-            (try other.eval()
-            catch { case _: Exception => null }) match {
-              case v: Int => v
-              case v: Short => v.toInt
-              case v: Byte => v.toInt
-              case _ => throw new org.apache.spark.sql.AnalysisException(
-                "INVALID_PARAMETER_VALUE.INTEGER",
-                Map("parameter" -> "numPerms", "functionName" -> "minhash_sigs",
-                  "invalidValue" -> other.sql))
-            }
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            "INVALID_PARAMETER_VALUE.INTEGER",
-            Map("parameter" -> "numPerms", "functionName" -> "minhash_sigs",
-              "invalidValue" -> other.sql))
-        }
-        MinHashSigs(args(0), n)
-      }))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_set"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.ShingleSet", "shingle_set"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => ShingleSet(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.SortedIntersectCount", "sorted_intersect_count"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SortedIntersectCount(args(0), args(1))))
+  override def apply(e: SparkSessionExtensions): Unit =
+    for (name <- GraftExtensions.SqlFunctions) {
+      val spec = Native.table(name)
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[NativeCall].getName, name),
+        (args: Seq[Expression]) =>
+          // a wrong argument count is reported by NativeCall's type check
+          if (args.length != spec.argTypes.length) Native.call(name, args)
+          else {
+            val (data, consts) = args.splitAt(args.length - spec.params.length)
+            Native.call(name, data ++ spec.params.zip(consts).map {
+              case (p, c) => GraftExtensions.intParam(name, p, c)
+            })
+          }))
+    }
+}
+
+object GraftExtensions {
+  /** The `Native` functions callable from SQL. */
+  val SqlFunctions: Seq[String] = Seq("qclean", "lang_detect", "simhash64", "sim_ratio",
+    "dot_f", "minhash_sigs", "shingle_set", "sorted_intersect_count")
+
+  /** A constant parameter (e.g. `numPerms`) must be a foldable integer — a
+    * clean analysis error beats the opaque ClassCastException a bare
+    * eval().asInstanceOf would throw on a column reference / BIGINT /
+    * string argument. A function builder runs BEFORE ConstantFolding, so `2+2` or
+    * `CAST(4 AS INT)` arrive as foldable non-Literals — evaluate them
+    * rather than rejecting working SQL. */
+  private def intParam(function: String, param: String, arg: Expression): Expression = {
+    val integral = Set[Any](IntegerType, ShortType, ByteType)
+    // eval() of a foldable can itself throw under ANSI (e.g.
+    // CAST('abc' AS INT)) — keep the clean analysis error
+    val value = if (arg.foldable && integral(arg.dataType)) {
+      try Option(arg.eval()) catch { case _: Exception => None }
+    } else None
+    value match {
+      case Some(v: Int) => Literal(v)
+      case Some(v: Short) => Literal(v.toInt)
+      case Some(v: Byte) => Literal(v.toInt)
+      case _ => throw new AnalysisException("INVALID_PARAMETER_VALUE.INTEGER",
+        Map("parameter" -> param, "functionName" -> function, "invalidValue" -> arg.sql))
+    }
   }
 }

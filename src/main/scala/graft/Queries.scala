@@ -175,9 +175,11 @@ object Queries {
         in.addData(dups.toSeq); q.processAllAvailable()
       } finally q.stop()
     }
-    s.table(sink)
+    val out = s.table(sink)
       .select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
       .orderBy(col("doc_id"))
+    s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
+    out
   }
 
   /** Streaming-EXECUTED near-dup contract query: `StreamOps.nearDupStream`
@@ -209,6 +211,7 @@ object Queries {
       } finally q.stop()
     }
     val cands = s.table(sink).groupBy(col("doc_id")).agg(min(col("base")).as("dup_of"))
+    s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
     augmented(s, dir).select(col("doc_id"))
       .join(cands, Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
@@ -249,6 +252,7 @@ object Queries {
       } finally q.stop()
     }
     val cands = s.table(sink).groupBy(col("doc_id")).agg(min(col("base")).as("dup_of"))
+    s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
     aug3(s, dir).select(col("doc_id"))
       .join(cands, Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
@@ -849,7 +853,7 @@ object Queries {
     }),
 
     "dd_simhash" -> ((s, dir) => {
-      // native codegen expression (graft.functions.SimHash64); rows-only
+      // native simhash64 expression (graft.functions.SimHash); rows-only
       // check (bit-level hash not expressible in DuckDB);
       // dd_simhash_md5 below is the oracle-exact twin of the same
       // construction over a DuckDB-reproducible base hash

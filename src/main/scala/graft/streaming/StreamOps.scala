@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.media.{DeterministicMediaStore, DeterministicOcr}
+import graft.media.{DeterministicMediaStore, DeterministicOcr, MediaStore, OcrEngine}
 import graft.model.{Doc, DocOut}
 import graft.pipeline.{ExtractConf, ExtractKernel}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -289,10 +289,14 @@ object StreamOps {
     * `foreachBatch`-friendly; here expressed directly so the plan is a
     * streaming MapPartitions (engine init amortized per partition per
     * micro-batch). */
-  def extractStream(docs: Dataset[Doc], conf: ExtractConf): Dataset[DocOut] = {
+  def extractStream(
+      docs: Dataset[Doc],
+      conf: ExtractConf,
+      store: MediaStore = DeterministicMediaStore,
+      engine: OcrEngine = DeterministicOcr): Dataset[DocOut] = {
     import docs.sparkSession.implicits._
     docs.mapPartitions { it =>
-      it.map(d => ExtractKernel.extractWhole(d, DeterministicMediaStore, DeterministicOcr, conf))
+      it.map(d => ExtractKernel.extractWhole(d, store, engine, conf))
     }
   }
 }

@@ -78,4 +78,15 @@ class ExtensionsSpec extends AnyFunSuite {
     val f2 = spark.sql("SELECT minhash_sigs('a b c d e', CAST(4 AS INT)) AS s").head().getSeq[Long](0)
     assert(f2 == f1, "foldable forms must produce the literal form's signatures")
   }
+
+  test("a wrong input type or an out-of-range constant is an analysis error naming the function") {
+    val e1 = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT simhash64(123)").collect()
+    }
+    assert(e1.getMessage.contains("simhash64"), e1.getMessage)
+    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT minhash_sigs('a b c d', 0)").collect()
+    }
+    assert(e2.getMessage.contains("minhash_sigs"), e2.getMessage)
+  }
 }

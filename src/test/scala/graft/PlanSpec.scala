@@ -100,16 +100,21 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native expressions stay inside whole-stage codegen (no fallback)") {
-    // the round-1 lesson inverted: lang_detect/qclean/simhash64/dot_f are
-    // UnaryExpression/BinaryExpression with doGenCode — their project
-    // stages must carry the WholeStageCodegen marker `*(n)`, and the plan
-    // must not show an interpreted-project fallback
-    for (q <- Seq("q_lang_detect", "dd_simhash", "q_textclean")) {
+    // the round-1 lesson inverted: the native kernels are NativeCall
+    // expressions whose codegen is a StaticInvoke static call — the
+    // operator evaluating each must carry the WholeStageCodegen marker
+    // `*(n)` on the same plan line that prints the function's SQL name
+    val queries = Seq("q_lang_detect" -> "lang_detect(", "dd_simhash" -> "simhash64(",
+      "q_textclean" -> "", "dd_simhash_md5" -> "md5_simhash_bits(",
+      "dd_substring_spans" -> "md5_window_hashes(", "ann_ivf" -> "cluster_dists(")
+    for ((q, fn) <- queries) {
       val df = Queries.all(q)(spark, sf)
       df.collect() // finalize the AdaptiveSparkPlan — codegen stages only
       //             appear in the executed plan (same trap as the AQE test)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("*("), s"$q lost whole-stage codegen:\n$plan")
+      assert(fn.isEmpty || plan.linesIterator.exists(l => l.contains(fn) && l.contains("*(")),
+        s"$q: $fn is not evaluated inside a codegen stage:\n$plan")
     }
   }
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.{Queries, SparkTestBase}
 import graft.pipeline.{ExtractConf, ExtractKernel, Fixtures}
-import graft.media.{DeterministicMediaStore, DeterministicOcr}
+import graft.media.{DeterministicMediaStore, DeterministicOcr, OcrEngine, PageMedia}
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -12,6 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
+
+  /** Marks every OCR pass, so a stream that ignored the injected engine
+    * would show unmarked media spans. */
+  private object MarkingOcr extends OcrEngine {
+    override def recognize(media: PageMedia, passIdx: Int): String =
+      "MARKED " + DeterministicOcr.recognize(media, passIdx)
+  }
 
   test("windowed event counts with watermark (append after watermark passes)") {
     import spark.implicits._
@@ -82,6 +89,41 @@ class StreamSpec extends AnyFunSuite {
         assert(got(d.doc_id).confidence == exp.confidence)
       }
     } finally q.stop()
+  }
+
+  test("streaming extraction uses the injected OcrEngine") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val conf = ExtractConf(level = "medium")
+    val docs = Fixtures.testDocs.take(16)
+    val in = MemoryStream[graft.model.Doc]
+    val q = StreamOps.extractStream(in.toDS(), conf, engine = MarkingOcr)
+      .writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("extracted_marked").start()
+    try {
+      in.addData(docs)
+      q.processAllAvailable()
+      val got = spark.table("extracted_marked").as[graft.model.DocOut]
+        .collect().map(d => d.doc_id -> d).toMap
+      assert(got.keySet == docs.map(_.doc_id).toSet)
+      docs.foreach { d =>
+        val exp = ExtractKernel.extractWhole(d, DeterministicMediaStore, MarkingOcr, conf)
+        assert(got(d.doc_id).spans == exp.spans, s"stream/batch mismatch for ${d.doc_id}")
+      }
+      assert(got.values.exists(_.spans.exists(_.text.contains("MARKED"))),
+        "OCR-backed spans must come from the injected engine")
+    } finally q.stop()
+  }
+
+  test("dd_stream_exact drops its memory-sink view after each execution") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    Seq((1L, "alpha beta gamma", "web"), (2L, "delta epsilon", "web"), (3L, "zeta", "pdf"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$dir/documents.parquet")
+    val runs = (1 to 2).map(_ => Queries.all("dd_stream_exact")(spark, dir).collect().length)
+    assert(runs == Seq(3, 3), s"each run keeps the 3 originals: $runs")
+    val sinks = spark.catalog.listTables().collect().map(_.name).filter(_.contains("_sink_"))
+    assert(sinks.isEmpty, s"leaked memory-sink views: ${sinks.mkString(", ")}")
   }
 
   test("streaming dedup: first doc per fingerprint wins, across micro-batches") {
