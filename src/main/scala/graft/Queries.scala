@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{AsOf, Dedup, Multimodal, Sampling, Similarity, TextOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -121,16 +121,6 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
-  /** Streaming-EXECUTED contract query (round-2 verdict item 3): the
-    * `flatMapGroupsWithState` exact dedup (StreamOps.dedupStream) run over
-    * the augmented corpus through a micro-batched MemoryStream — the
-    * originals arrive in batch 1 and the +1,000,000 duplicates in batch 2,
-    * so the cross-micro-batch STATE does the dedup work (not a batch
-    * groupBy in disguise). Returns the final keeper table; the oracle is
-    * plain first-doc-wins SQL. The driver-side collect here is the
-    * MemoryStream harness feeding the stream (bounded: sf0.1 = 10k rows);
-    * a production job reads Kafka/files with the same dedupStream
-    * transformation. */
   private val streamSinkSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Run `body` (a streaming query start→stop) with
@@ -156,107 +146,48 @@ object Queries {
     try body finally s.conf.set(key, prev)
   }
 
-  private def streamExactDedup(s: SparkSession, dir: String): DataFrame = {
+  /** The MemoryStream harness of the streaming-EXECUTED contract queries:
+    * feeds the documents table as `epochs` micro-batches — batch e holds
+    * every doc with id + e·10^6 at event time `EpochMs(e)` — through
+    * `op` into a memory sink, then returns `readBack` of the sink rows.
+    * Each batch after the first re-sends the same texts, so the
+    * cross-micro-batch STATE does the dedup work (not a batch groupBy in
+    * disguise). The driver-side collect is the harness feeding the stream
+    * (bounded: sf0.1 = 10k rows/batch); a production job reads
+    * Kafka/files with the same operator. */
+  private def runStream(s: SparkSession, dir: String, name: String, epochs: Int)(
+      op: DataFrame => Dataset[_])(readBack: DataFrame => DataFrame): DataFrame = {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = augmented(s, dir)
-      .select(col("doc_id").cast("long"), col("text"))
+    val rows = docs(s, dir).select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)].collect()
-    val (orig, dups) = rows.partition(_._1 < 1000000L)
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)]
     // unique sink name: the bench executes each query twice (warm + timed)
-    val sink = s"dd_stream_exact_sink_${streamSinkSeq.incrementAndGet()}"
-    withStreamShufflePartitions(s, orig.length) {
-      val q = graft.streaming.StreamOps.dedupStream(in.toDS())
-        .toDF("doc_id", "text")
+    val sink = s"${name}_sink_${streamSinkSeq.incrementAndGet()}"
+    withStreamShufflePartitions(s, rows.length) {
+      val q = op(in.toDF().toDF("doc_id", "text", "ts")).toDF()
         .writeStream.outputMode("append").format("memory").queryName(sink).start()
-      try {
-        in.addData(orig.toSeq); q.processAllAvailable()
-        in.addData(dups.toSeq); q.processAllAvailable()
+      try (0 until epochs).foreach { e =>
+        val ts = new java.sql.Timestamp(EpochMs(e))
+        in.addData(rows.map { case (id, t) => (id + e * 1000000L, t, ts) }.toSeq)
+        q.processAllAvailable()
       } finally q.stop()
     }
-    val out = s.table(sink)
-      .select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
-      .orderBy(col("doc_id"))
+    val out = readBack(s.table(sink))
     s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
     out
   }
 
-  /** Streaming-EXECUTED near-dup contract query: `StreamOps.nearDupStream`
-    * (band-digest-keyed cross-batch state) over the augmented corpus in two
-    * micro-batches — originals then the +1,000,000 copies, so every copy's
-    * collision is found by STATE from a previous batch, not a within-batch
-    * join. Per-doc resolution (min base across bands) runs in the batch
-    * read-back of the sink (a stateful flatMap + streaming agg is a
-    * restricted multi-stateful combination; the cross-batch state is the
-    * part that must stream). Output (doc_id, dup_of nullable) — the oracle
-    * replays the identical semantics as a batch LEFT-JOIN-min over the
-    * shared band CTEs. */
-  private def streamNearDup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = augmented(s, dir)
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)].collect()
-    val (orig, dups) = rows.partition(_._1 < 1000000L)
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sink = s"dd_stream_near_sink_${streamSinkSeq.incrementAndGet()}"
-    withStreamShufflePartitions(s, orig.length) {
-      val q = graft.streaming.StreamOps.nearDupStream(in.toDS())
-        .toDF("doc_id", "base")
-        .writeStream.outputMode("append").format("memory").queryName(sink).start()
-      try {
-        in.addData(orig.toSeq); q.processAllAvailable()
-        in.addData(dups.toSeq); q.processAllAvailable()
-      } finally q.stop()
-    }
-    val cands = s.table(sink).groupBy(col("doc_id")).agg(min(col("base")).as("dup_of"))
-    s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
-    augmented(s, dir).select(col("doc_id"))
-      .join(cands, Seq("doc_id"), "left")
+  /** Per-doc near-dup resolution in the batch read-back (min base across
+    * bands; a stateful flatMap + streaming agg is a restricted
+    * multi-stateful combination, so the cross-batch state is the part that
+    * streams): every fed doc with its nullable `dup_of`. */
+  private def nearDupOf(fed: DataFrame, sink: DataFrame): DataFrame =
+    fed.select(col("doc_id"))
+      .join(sink.toDF("doc_id", "base").groupBy(col("doc_id")).agg(min(col("base")).as("dup_of")),
+        Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
-  }
-
-  /** Streaming-EXECUTED TTL near-dup contract query (round-4 verdict item
-    * 4): `StreamOps.nearDupStreamTtl` — the BOUNDED-state form that is the
-    * actual 10^12-doc streaming shape — over three micro-batches at fixed
-    * event epochs (`EpochMs`): originals, then in-window +1e6 copies
-    * (collide via cross-batch state), then +2e6 copies arriving PAST the
-    * TTL window (state expired in event time → re-emitted as new). The
-    * oracle replays the window chain in batch SQL: with these epochs the
-    * TTL partitions docs into window-compatible classes {epoch 0, 1} and
-    * {epoch 2}, so "smallest earlier doc sharing a band digest" applies
-    * within a class and never across (see the oracle's epoch predicate).
-    * Per-doc min across bands resolves in the batch read-back, as in
-    * `dd_stream_near`. */
-  private def streamNearDupTtl(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = docs(s, dir)
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)].collect()
-    def epoch(off: Long, tsMs: Long): Seq[(Long, String, java.sql.Timestamp)] =
-      rows.iterator.map { case (id, t) =>
-        (id + off, t, new java.sql.Timestamp(tsMs)) }.toSeq
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val sink = s"dd_stream_near_ttl_sink_${streamSinkSeq.incrementAndGet()}"
-    withStreamShufflePartitions(s, rows.length) {
-      val q = graft.streaming.StreamOps.nearDupStreamTtl(in.toDS(), ttlMs = StreamTtlMs)
-        .toDF("doc_id", "base")
-        .writeStream.outputMode("append").format("memory").queryName(sink).start()
-      try {
-        in.addData(epoch(0L, EpochMs(0))); q.processAllAvailable()
-        in.addData(epoch(1000000L, EpochMs(1))); q.processAllAvailable()
-        in.addData(epoch(2000000L, EpochMs(2))); q.processAllAvailable()
-      } finally q.stop()
-    }
-    val cands = s.table(sink).groupBy(col("doc_id")).agg(min(col("base")).as("dup_of"))
-    s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
-    aug3(s, dir).select(col("doc_id"))
-      .join(cands, Seq("doc_id"), "left")
-      .orderBy(col("doc_id"))
-  }
 
   /** Sequence length for `pipe_pack` (tokens per packed training sequence;
     * shared with the oracle SQL). */
@@ -864,11 +795,35 @@ object Queries {
 
     "dd_simhash_md5" -> ((s, dir) => simhashMd5(docs(s, dir))),
 
-    "dd_stream_exact" -> ((s, dir) => streamExactDedup(s, dir)),
+    // `StreamOps.dedupStream` over the augmented corpus in two
+    // micro-batches, originals then the +1,000,000 copies; the oracle is
+    // plain first-doc-wins SQL
+    "dd_stream_exact" -> ((s, dir) => runStream(s, dir, "dd_stream_exact", 2)(
+      graft.streaming.StreamOps.dedupStream(_)) { sink =>
+      sink.toDF("doc_id", "text")
+        .select(col("doc_id"), TextOps.fingerprintCol(col("text")).as("fp"))
+        .orderBy(col("doc_id"))
+    }),
 
-    "dd_stream_near" -> ((s, dir) => streamNearDup(s, dir)),
+    // `StreamOps.nearDupStream` over the same two micro-batches: every
+    // copy's collision is found by STATE from a previous batch, not a
+    // within-batch join; the oracle replays it as a batch LEFT-JOIN-min
+    // over the shared band CTEs
+    "dd_stream_near" -> ((s, dir) => runStream(s, dir, "dd_stream_near", 2)(
+      graft.streaming.StreamOps.nearDupStream(_))(
+      nearDupOf(augmented(s, dir), _))),
 
-    "dd_stream_near_ttl" -> ((s, dir) => streamNearDupTtl(s, dir)),
+    // the BOUNDED-state form (`nearDupStream` with a TTL) over three
+    // micro-batches: originals, in-window +1e6 copies (collide via
+    // cross-batch state), then +2e6 copies PAST the TTL window (state
+    // expired in event time → re-emitted as new). The oracle replays the
+    // window chain in batch SQL: with these epochs the TTL partitions docs
+    // into window-compatible classes {epoch 0, 1} and {epoch 2}, so
+    // "smallest earlier doc sharing a band digest" applies within a class
+    // and never across (see `epochClassPredicateSql`)
+    "dd_stream_near_ttl" -> ((s, dir) => runStream(s, dir, "dd_stream_near_ttl", 3)(
+      graft.streaming.StreamOps.nearDupStream(_, Some(graft.streaming.StreamOps.Ttl(StreamTtlMs))))(
+      nearDupOf(aug3(s, dir), _))),
 
     "dd_decontam" -> ((s, dir) => {
       // benchmark decontamination: corpus docs sharing any 3-gram shingle
@@ -1685,7 +1640,7 @@ object Queries {
          |ORDER BY g.doc_id""".stripMargin,
       extraCte = true),
 
-    // Windowed batch replay of the TTL stream (see `streamNearDupTtl`):
+    // Windowed batch replay of the TTL stream (see `runStream`):
     // docs live in epoch classes by id range (epoch = doc_id div 1e6, the
     // harness's batch assignment), and the window-compatibility predicate
     // is GENERATED from the shared EpochMs/StreamTtlMs constants — the

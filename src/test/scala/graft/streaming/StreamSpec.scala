@@ -4,6 +4,7 @@ import graft.{Queries, SparkTestBase}
 import graft.pipeline.{ExtractConf, ExtractKernel, Fixtures}
 import graft.media.{DeterministicMediaStore, DeterministicOcr, OcrEngine, PageMedia}
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -130,7 +131,7 @@ class StreamSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = StreamOps.dedupStream(in.toDS())
+    val q = StreamOps.dedupStream(in.toDS().toDF("doc_id", "text"))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("dedup_stream").start()
     try {
@@ -157,7 +158,7 @@ class StreamSpec extends AnyFunSuite {
       "of the bright summer season")
     val nearCopy = base.replace("careful", "gentle") // 1 of ~40 words
     val in = MemoryStream[(Long, String)]
-    val q = StreamOps.nearDupStream(in.toDS()).toDF("doc_id", "base")
+    val q = StreamOps.nearDupStream(in.toDS().toDF("doc_id", "text")).toDF("doc_id", "base")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("near_stream").start()
     try {
@@ -184,7 +185,8 @@ class StreamSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamOps.dedupStreamTtl(in.toDS(), ttlMs = 10 * 60 * 1000L)
+    val q = StreamOps.dedupStream(in.toDS().toDF("doc_id", "text", "ts"),
+        Some(StreamOps.Ttl(10 * 60 * 1000L)))
       .toDF("doc_id", "text")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ttl_dedup").start()
@@ -211,7 +213,8 @@ class StreamSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamOps.dedupStreamTtl(in.toDS(), ttlMs = 10 * 60 * 1000L)
+    val q = StreamOps.dedupStream(in.toDS().toDF("doc_id", "text", "ts"),
+        Some(StreamOps.Ttl(10 * 60 * 1000L)))
       .toDF("doc_id", "text")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ttl_dedup_batching").start()
@@ -238,7 +241,8 @@ class StreamSpec extends AnyFunSuite {
     // silent loss, which is why the lateness is a sized knob, not a
     // hidden constant (round-4 advice)
     val in0 = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q0 = StreamOps.dedupStreamTtl(in0.toDS(), ttlMs = 10 * 60 * 1000L)
+    val q0 = StreamOps.dedupStream(in0.toDS().toDF("doc_id", "text", "ts"),
+        Some(StreamOps.Ttl(10 * 60 * 1000L)))
       .toDF("doc_id", "text")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ttl_late0").start()
@@ -252,8 +256,8 @@ class StreamSpec extends AnyFunSuite {
     } finally q0.stop()
     // the same stream with 15-minute allowed lateness keeps the straggler
     val in1 = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q1 = StreamOps.dedupStreamTtl(in1.toDS(), ttlMs = 10 * 60 * 1000L,
-        allowedLateness = "15 minutes")
+    val q1 = StreamOps.dedupStream(in1.toDS().toDF("doc_id", "text", "ts"),
+        Some(StreamOps.Ttl(10 * 60 * 1000L, allowedLateness = "15 minutes")))
       .toDF("doc_id", "text")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ttl_late15").start()
@@ -273,7 +277,8 @@ class StreamSpec extends AnyFunSuite {
     def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
     val base = "the quick brown fox jumps over the lazy dog near the still river tonight"
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamOps.nearDupStreamTtl(in.toDS(), ttlMs = 10 * 60 * 1000L)
+    val q = StreamOps.nearDupStream(in.toDS().toDF("doc_id", "text", "ts"),
+        Some(StreamOps.Ttl(10 * 60 * 1000L)))
       .toDF("doc_id", "base")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ttl_near").start()
@@ -294,6 +299,76 @@ class StreamSpec extends AnyFunSuite {
       assert(hits.get(2L).contains(1L), s"in-window near-dup must collide: $hits")
       assert(!hits.contains(5L), s"post-expiry doc must read as new: $hits")
     } finally q.stop()
+  }
+
+  /** Feeds `batches` of (doc_id, text, ts) through `op` into a fresh
+    * memory sink and returns every emitted row. */
+  private def emitted(batches: Seq[Seq[(Long, String, Timestamp)]])(
+      op: DataFrame => Dataset[_]): Set[Row] = {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[(Long, String, Timestamp)]
+    val sink = s"dedup_ops_${sinkSeq.incrementAndGet()}"
+    val q = op(in.toDS().toDF("doc_id", "text", "ts"))
+      .writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName(sink).start()
+    try {
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      spark.table(sink).collect().toSet
+    } finally { q.stop(); spark.catalog.dropTempView(sink) }
+  }
+  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Arrival-ordered rows (ids and event times both ascending) with exact,
+    * case/whitespace and near duplicates inside and across thirds, plus a
+    * 2-word doc that has no band digests. */
+  private val arrivals: Seq[(Long, String, Timestamp)] = {
+    val base = "the quick brown fox jumps over the lazy dog near the still river tonight"
+    val other = "a completely unrelated document about industrial chemistry processes"
+    Seq(base, other, "Hello   World", base, base.replace("river", "lake"),
+      "hello world", other, base, "fresh content about glacier maps and tidal charts")
+      .zipWithIndex.map { case (t, i) =>
+        (i + 1L, t, Timestamp.valueOf(f"2024-01-01 10:${i * 5}%02d:00")) }
+  }
+
+  test("TTL of Long.MaxValue ms is the unbounded operator: the window end saturates") {
+    val thirds = arrivals.grouped(3).toSeq
+    val forever = Some(StreamOps.Ttl(Long.MaxValue))
+    val exact = emitted(thirds)(StreamOps.dedupStream(_))
+    assert(exact.map(_.getLong(0)) == Set(1L, 2L, 3L, 5L, 9L), s"got $exact")
+    assert(emitted(thirds)(StreamOps.dedupStream(_, forever)) == exact)
+    val near = emitted(thirds)(StreamOps.nearDupStream(_))
+    assert(near.exists(r => r.getLong(0) == 8L && r.getLong(1) == 1L), s"got $near")
+    assert(emitted(thirds)(StreamOps.nearDupStream(_, forever)) == near)
+    intercept[IllegalArgumentException](StreamOps.Ttl(-1L))
+  }
+
+  test("unbounded dedup and near-dup output is independent of micro-batching") {
+    val one = Seq(arrivals)
+    val three = arrivals.grouped(3).toSeq
+    assert(three.length == 3)
+    assert(emitted(one)(StreamOps.dedupStream(_)) == emitted(three)(StreamOps.dedupStream(_)))
+    assert(emitted(one)(StreamOps.nearDupStream(_)) == emitted(three)(StreamOps.nearDupStream(_)))
+  }
+
+  test("watermark and event-time timeout appear only on the TTL forms") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, FlatMapGroupsWithState}
+    import org.apache.spark.sql.streaming.GroupStateTimeout
+    implicit val sq = spark.sqlContext
+    val docs = MemoryStream[(Long, String, Timestamp)].toDS().toDF("doc_id", "text", "ts")
+    val ttl = Some(StreamOps.Ttl(60000L))
+    for ((name, op) <- Seq[(String, Option[StreamOps.Ttl] => Dataset[_])](
+        "dedupStream" -> (StreamOps.dedupStream(docs, _)),
+        "nearDupStream" -> (StreamOps.nearDupStream(docs, _)))) {
+      def shape(t: Option[StreamOps.Ttl]) = {
+        val plan = op(t).queryExecution.analyzed
+        (plan.collect { case w: EventTimeWatermark => w }.length,
+          plan.collect { case f: FlatMapGroupsWithState => f.timeout })
+      }
+      assert(shape(None) == (0, Seq(GroupStateTimeout.NoTimeout())), name)
+      assert(shape(ttl) == (1, Seq(GroupStateTimeout.EventTimeTimeout())), name)
+    }
   }
 
   test("session windows: gap-separated events form two sessions") {
