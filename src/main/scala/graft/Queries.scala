@@ -29,30 +29,28 @@ object Queries {
   /** cents-exact money aggregate: per-row round to integer cents, then sum. */
   private def cents(c: Column): Column = sum(round(c * 100)).cast("long")
 
-  /** Dup-augmented documents corpus for the dedup operators: each text
-    * appears exactly twice (ids i and i+1000000). */
-  private def augmented(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
-    d.unionAll(d.select(col("doc_id") + lit(1000000L), col("text"), col("source")))
-      .toDF("doc_id", "text", "source")
-  }
-  private val augmentedSql =
-    """aug AS (SELECT doc_id, text, source FROM documents
-      |         UNION ALL SELECT doc_id + 1000000, text, source FROM documents)""".stripMargin
+  /** Id offset between the copies of a dup-augmented corpus (and between
+    * the micro-batches of the streaming harness): copy c of doc i has id
+    * i + c·CopyStride. */
+  private val CopyStride = 1000000L
 
-  /** Triple-copy corpus for the TTL streaming query: epoch 0 originals,
-    * epoch 1 (+1e6) in-window duplicates, epoch 2 (+2e6) past-TTL
-    * re-arrivals. Shares text content with `augmented`. */
-  private def aug3(s: SparkSession, dir: String): DataFrame = {
+  /** Dup-augmented documents corpus for the dedup operators: every text
+    * appears `copies` times, copy c (0-based) with id doc_id + c·CopyStride.
+    * Two copies for the batch dedup suite; three for the TTL streaming
+    * query (epoch 0 originals, epoch 1 in-window duplicates, epoch 2
+    * past-TTL re-arrivals). */
+  private def augmented(s: SparkSession, dir: String, copies: Int): DataFrame = {
     val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
-    d.unionAll(d.select(col("doc_id") + lit(1000000L), col("text"), col("source")))
-      .unionAll(d.select(col("doc_id") + lit(2000000L), col("text"), col("source")))
+    (1 until copies)
+      .map(c => d.select(col("doc_id") + lit(c * CopyStride), col("text"), col("source")))
+      .foldLeft(d)(_ unionAll _)
       .toDF("doc_id", "text", "source")
   }
-  private val aug3Sql =
-    """aug AS (SELECT doc_id, text, source FROM documents
-      |         UNION ALL SELECT doc_id + 1000000, text, source FROM documents
-      |         UNION ALL SELECT doc_id + 2000000, text, source FROM documents)""".stripMargin
+  /** The `aug` CTE of the oracle SQL: the same corpus as `augmented`. */
+  private def augmentedSql(copies: Int): String =
+    "aug AS (SELECT doc_id, text, source FROM documents" + (1 until copies).map(c =>
+      s"\n         UNION ALL SELECT doc_id + ${c * CopyStride}, text, source FROM documents")
+      .mkString + ")"
 
   /** TTL + per-batch event epochs of `dd_stream_near_ttl` (ms). Chosen so
     * epoch 1 extends epoch 0's window (EpochMs(1) − EpochMs(0) ≤ TTL) and
@@ -83,8 +81,8 @@ object Queries {
           "every in-class pair is within the TTL")
     }
     classes.map { c =>
-      val lo = c.head * 1000000L
-      val hi = (c.last + 1) * 1000000L
+      val lo = c.head * CopyStride
+      val hi = (c.last + 1) * CopyStride
       s"($aId >= $lo AND $aId < $hi AND $bId >= $lo AND $bId < $hi)"
     }.mkString("(", " OR ", ")")
   }
@@ -123,59 +121,58 @@ object Queries {
 
   private val streamSinkSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Run `body` (a streaming query start→stop) with
-    * `spark.sql.shuffle.partitions` derived from the PER-BATCH input
-    * volume, restoring the session value after (round-5 verdict item 1;
-    * guide §2 scale-adaptive partitioning). Structured Streaming pins one
-    * state-store task per shuffle partition for EVERY micro-batch (AQE
-    * never coalesces stateful exchanges), so a session-wide setting sized
-    * for batch scans pays (partitions × batches) state-store commits
-    * regardless of data volume — pure overhead when a batch carries a few
-    * thousand rows, and exactly how a production stream sizes its state
-    * stores (to state volume, not to the batch engine's scan parallelism).
-    * Derivation: one state task per ~25k rows/batch, floor 4 (the path
-    * keeps real shuffles and parallel state tasks), cap = the cluster's
-    * default parallelism. Results are partitioning-independent by
-    * construction: stateful groups are hash-assigned whole, and each
-    * group's emission logic is deterministic (spec-pinned). */
-  private def withStreamShufflePartitions[T](s: SparkSession, batchRows: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val n = math.max(4, math.min(s.sparkContext.defaultParallelism, batchRows / 25000))
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   /** The MemoryStream harness of the streaming-EXECUTED contract queries:
     * feeds the documents table as `epochs` micro-batches — batch e holds
-    * every doc with id + e·10^6 at event time `EpochMs(e)` — through
+    * every doc with id + e·CopyStride at event time `EpochMs(e)` — through
     * `op` into a memory sink, then returns `readBack` of the sink rows.
     * Each batch after the first re-sends the same texts, so the
     * cross-micro-batch STATE does the dedup work (not a batch groupBy in
     * disguise). The driver-side collect is the harness feeding the stream
     * (bounded: sf0.1 = 10k rows/batch); a production job reads
-    * Kafka/files with the same operator. */
+    * Kafka/files with the same operator.
+    *
+    * The stream runs in a NEW session of `s` (the caller's SQL settings
+    * copied over) whose `spark.sql.shuffle.partitions` is derived from the
+    * PER-BATCH input volume (round-5 verdict item 1; guide §2
+    * scale-adaptive partitioning). Structured Streaming pins one
+    * state-store task per shuffle partition for EVERY micro-batch (AQE
+    * never coalesces stateful exchanges), so a setting sized for batch
+    * scans pays (partitions × batches) state-store commits regardless of
+    * data volume — pure overhead when a batch carries a few thousand rows,
+    * and exactly how a production stream sizes its state stores (to state
+    * volume, not to the batch engine's scan parallelism). Derivation: one
+    * state task per ~25k rows/batch, floor 4 (the path keeps real shuffles
+    * and parallel state tasks), cap = the cluster's default parallelism.
+    * Setting it on the caller's session instead would show it to every
+    * query running there concurrently. The read-back needs no stream
+    * setting and runs in the caller's session: in a fresh session the
+    * near-dup read-backs ran 10-35% slower (perfbench queries_stream, 4
+    * cores). Results are partitioning-independent by construction:
+    * stateful groups are hash-assigned whole, and each group's emission
+    * logic is deterministic (spec-pinned). */
   private def runStream(s: SparkSession, dir: String, name: String, epochs: Int)(
       op: DataFrame => Dataset[_])(readBack: DataFrame => DataFrame): DataFrame = {
-    import s.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = s.newSession()
+    import ss.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val rows = docs(s, dir).select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)].collect()
+    s.conf.getAll.foreach { case (k, v) => if (ss.conf.isModifiable(k)) ss.conf.set(k, v) }
+    ss.conf.set("spark.sql.shuffle.partitions",
+      math.max(4, math.min(s.sparkContext.defaultParallelism, rows.length / 25000)).toString)
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
     // unique sink name: the bench executes each query twice (warm + timed)
     val sink = s"${name}_sink_${streamSinkSeq.incrementAndGet()}"
-    withStreamShufflePartitions(s, rows.length) {
-      val q = op(in.toDF().toDF("doc_id", "text", "ts")).toDF()
-        .writeStream.outputMode("append").format("memory").queryName(sink).start()
-      try (0 until epochs).foreach { e =>
-        val ts = new java.sql.Timestamp(EpochMs(e))
-        in.addData(rows.map { case (id, t) => (id + e * 1000000L, t, ts) }.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    val out = readBack(s.table(sink))
-    s.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
+    val q = op(in.toDF().toDF("doc_id", "text", "ts")).toDF()
+      .writeStream.outputMode("append").format("memory").queryName(sink).start()
+    try (0 until epochs).foreach { e =>
+      val ts = new java.sql.Timestamp(EpochMs(e))
+      in.addData(rows.map { case (id, t) => (id + e * CopyStride, t, ts) }.toSeq)
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = readBack(org.apache.spark.sql.graft.bridge.inSession(s, ss.table(sink)))
+    ss.catalog.dropTempView(sink) // the analyzed plan holds the sink's rows
     out
   }
 
@@ -188,6 +185,24 @@ object Queries {
       .join(sink.toDF("doc_id", "base").groupBy(col("doc_id")).agg(min(col("base")).as("dup_of")),
         Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
+
+  /** `dd_decontam` / `dd_decontam_fast`: corpus docs sharing any 3-gram
+    * shingle with the (deterministic) eval set are flagged with their
+    * smallest contaminating benchmark doc + the distinct-shingle overlap
+    * count. Eval set = originals with doc_id % 97 == 0; the corpus keeps
+    * those docs' +CopyStride exact copies, so contamination is guaranteed
+    * present (a vacuous empty result would prove nothing) alongside any
+    * organic overlap. Benchmark side broadcasts (see Dedup.decontaminate). */
+  private def decontam(s: SparkSession, dir: String, hash: Dedup.Hash): DataFrame = {
+    val bench = docs(s, dir)
+      .filter(col("doc_id") % 97 === 0)
+      .select(col("doc_id"), col("text"))
+    val corpus = augmented(s, dir, 2)
+      .filter(!(col("doc_id") < CopyStride && col("doc_id") % 97 === 0))
+      .select(col("doc_id"), col("text"))
+    Dedup.decontaminate(corpus, bench, "doc_id", "text", hash)
+      .orderBy(col("doc_id"))
+  }
 
   /** Sequence length for `pipe_pack` (tokens per packed training sequence;
     * shared with the oracle SQL). */
@@ -744,13 +759,13 @@ object Queries {
 
     // --- dedup suite ------------------------------------------------------
     "dd_exact" -> ((s, dir) => {
-      Dedup.exact(augmented(s, dir), "doc_id", "text")
+      Dedup.exact(augmented(s, dir, 2), "doc_id", "text")
         .filter(col("n_copies") >= 2)
         .orderBy(col("fp"))
     }),
 
     "dd_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashCandidates(augmented(s, dir), "doc_id", "text")
+      Dedup.minhashCandidates(augmented(s, dir, 2), "doc_id", "text")
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -758,7 +773,7 @@ object Queries {
       // two-stage dedup: LSH candidates → exact Jaccard verify; threshold
       // ≥ 0.6 by integer cross-multiplication (no float parity risk):
       // n_common / (n_a + n_b - n_common) >= 0.6
-      Dedup.ngramJaccardVerified(augmented(s, dir), "doc_id", "text")
+      Dedup.jaccardVerified(augmented(s, dir, 2), "doc_id", "text")
         .filter(Dedup.jaccardAtLeast(col("n_common"), col("n_a"), col("n_b")))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -769,7 +784,7 @@ object Queries {
       // HOF machinery, not the hash, was the cost). Rows-only — the 64-bit
       // base hash is not DuckDB-reproducible; dd_minhash_lsh is the
       // oracle-exact twin with the same plan shape.
-      Dedup.minhashCandidatesNative(augmented(s, dir), "doc_id", "text")
+      Dedup.minhashCandidates(augmented(s, dir, 2), "doc_id", "text", Dedup.Native)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -778,7 +793,7 @@ object Queries {
       // banded candidates → sorted-merge Jaccard verify. Rows-only (native
       // 64-bit hashes not DuckDB-reproducible); dd_ngram_jaccard is the
       // oracle-exact twin of the same two-stage shape.
-      Dedup.jaccardVerifiedNative(augmented(s, dir), "doc_id", "text")
+      Dedup.jaccardVerified(augmented(s, dir, 2), "doc_id", "text", Dedup.Native)
         .filter(Dedup.jaccardAtLeast(col("n_common"), col("n_a"), col("n_b")))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -811,7 +826,7 @@ object Queries {
     // over the shared band CTEs
     "dd_stream_near" -> ((s, dir) => runStream(s, dir, "dd_stream_near", 2)(
       graft.streaming.StreamOps.nearDupStream(_))(
-      nearDupOf(augmented(s, dir), _))),
+      nearDupOf(augmented(s, dir, 2), _))),
 
     // the BOUNDED-state form (`nearDupStream` with a TTL) over three
     // micro-batches: originals, in-window +1e6 copies (collide via
@@ -823,42 +838,14 @@ object Queries {
     // and never across (see `epochClassPredicateSql`)
     "dd_stream_near_ttl" -> ((s, dir) => runStream(s, dir, "dd_stream_near_ttl", 3)(
       graft.streaming.StreamOps.nearDupStream(_, Some(graft.streaming.StreamOps.Ttl(StreamTtlMs))))(
-      nearDupOf(aug3(s, dir), _))),
+      nearDupOf(augmented(s, dir, 3), _))),
 
-    "dd_decontam" -> ((s, dir) => {
-      // benchmark decontamination: corpus docs sharing any 3-gram shingle
-      // with the (deterministic) eval set are flagged with their smallest
-      // contaminating benchmark doc + the distinct-shingle overlap count.
-      // Eval set = originals with doc_id % 97 == 0; the corpus keeps those
-      // docs' +1e6 exact copies, so contamination is guaranteed present
-      // (a vacuous empty result would prove nothing) alongside any organic
-      // overlap. Benchmark side broadcasts (see Dedup.decontaminate).
-      val aug = augmented(s, dir)
-      val bench = docs(s, dir)
-        .filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), col("text"))
-      val corpus = aug
-        .filter(!(col("doc_id") < 1000000L && col("doc_id") % 97 === 0))
-        .select(col("doc_id"), col("text"))
-      Dedup.decontaminate(corpus, bench, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    "dd_decontam_fast" -> ((s, dir) => {
-      // prod-speed twin of dd_decontam: native 64-bit shingle hashes
-      // (rows-only by construction; dd_decontam is the value-exact twin
-      // with the identical plan shape — broadcast bench side, hit-only
-      // aggregate)
-      val aug = augmented(s, dir)
-      val bench = docs(s, dir)
-        .filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), col("text"))
-      val corpus = aug
-        .filter(!(col("doc_id") < 1000000L && col("doc_id") % 97 === 0))
-        .select(col("doc_id"), col("text"))
-      Dedup.decontaminateFast(corpus, bench, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
+    // benchmark decontamination (see `decontam`): oracle-exact md5 grams,
+    // and the prod-speed twin over native 64-bit gram hashes (rows-only by
+    // construction, identical plan shape — broadcast bench side, hit-only
+    // aggregate)
+    "dd_decontam" -> ((s, dir) => decontam(s, dir, Dedup.Md5)),
+    "dd_decontam_fast" -> ((s, dir) => decontam(s, dir, Dedup.Native)),
 
     "dd_components" -> ((s, dir) => {
       // duplicate-CLUSTER resolution: the step after LSH + verify in a real
@@ -867,7 +854,7 @@ object Queries {
       // id) via alternating large-star/small-star connected components
       // (O(log² n) rounds; see Dedup.connectedComponents). DuckDB oracle =
       // WITH RECURSIVE reachability over the same verified edges.
-      val ver = Dedup.ngramJaccardVerified(augmented(s, dir), "doc_id", "text")
+      val ver = Dedup.jaccardVerified(augmented(s, dir, 2), "doc_id", "text")
         .filter(Dedup.jaccardAtLeast(col("n_common"), col("n_a"), col("n_b")))
       // localFinishEdges = 256 (not the 2^20 default): at sf0.1 the edge
       // set starts ~600, so the contract run exercises BOTH the
@@ -897,7 +884,7 @@ object Queries {
       // candidates; see Dedup.verifyAgainstIndex. PlanSpec asserts the
       // PartitionFilters entry)
       val batchSets = batch.select(col("doc_id").as("id_new"),
-        Dedup.shingleSetStrs(col("text")).as("shl_n"))
+        Dedup.Md5.shingleSet(col("text")).as("shl_n"))
       val ver = Dedup.verifyAgainstIndex(s, idx, "doc_id", cand, batchSets)
         .filter(Dedup.jaccardAtLeast(col("n_common"), col("n_a"), col("n_b")))
       batch.select(col("doc_id"))
@@ -924,14 +911,14 @@ object Queries {
       // see (< 3 words → no shingles) are killed by the n_words >= 30
       // gate on both sides. DedupGuardSpec proves the candidate count
       // stays O(n) under a 10³-copy hot corpus.
-      val aug = augmented(s, dir)
+      val aug = augmented(s, dir, 2)
       val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
       val withFp = aug
         .withColumn("fp", TextOps.fingerprintCol(col("text")))
         .withColumn("rn", row_number().over(w))
       val reps = withFp.filter(col("rn") === 1).select(col("doc_id"), col("text"))
       val exactLosers = withFp.filter(col("rn") > 1).select(col("doc_id"))
-      val ver = Dedup.ngramJaccardVerified(reps, "doc_id", "text", maxBucket = 1024)
+      val ver = Dedup.jaccardVerified(reps, "doc_id", "text", maxBucket = 1024)
         .filter(Dedup.jaccardAtLeast(col("n_common"), col("n_a"), col("n_b")))
       val ccLosers = Dedup.connectedComponents(ver, "id_a", "id_b",
           localFinishEdges = 256) // see dd_components: exercises both paths
@@ -959,7 +946,7 @@ object Queries {
       // re-scan between pipeline stages).
       val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
       val quality = TextOps.qualityCols(col("text")).toMap
-      augmented(s, dir)
+      augmented(s, dir, 2)
         .withColumn("fp", TextOps.fingerprintCol(col("text")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -1027,10 +1014,10 @@ object Queries {
     "ann_lsh_probe" -> ((s, dir) => {
       // multi-probe LSH: Hamming-1 neighbor buckets widen the candidate
       // set (recall dial) while bucket IN (...) stays a partition filter
-      // over the materialized index — 5 of 16 partitions read at p=4
+      // over the materialized index — SrpPlanes + 1 = 5 of 16 partitions
       val q = queryVector(s, dir)
-      Similarity.lshIndexedTopKMultiProbe(s, srpIndexPath(s, dir),
-        "vec_id", "embedding", q, 10, radius = 1)
+      Similarity.lshIndexedTopK(s, srpIndexPath(s, dir), "vec_id", "embedding", q, 10,
+        radius = 1)
     }),
 
     "ann_ivf_indexed" -> ((s, dir) => {
@@ -1109,18 +1096,22 @@ object Queries {
   )
 
   /** Shared minhash-LSH CTE prefix for the dedup oracles — mirrors
-    * `Dedup.minhashSignature`/`minhashCandidates` exactly: per-row shingle
-    * sets → list_min of 8-hex-char lanes sliced from md5('k|'+s) (lane i =
-    * hash i/4, chars 1+8·(i%4)..) → 4 two-row band digests. */
+    * `Dedup.minhashSignature`/`minhashCandidates` exactly, from the same
+    * `Dedup.NumPerms`/`RowsPerBand` constants: per-row shingle sets →
+    * list_min of 8-hex-char lanes sliced from md5('k|'+s) (lane i = hash
+    * i/4, chars 1+8·(i%4)..) → NumPerms/RowsPerBand band digests of
+    * RowsPerBand lanes each, over a `copies`-fold `aug` corpus. */
   private def minhashOracle(tail: String, extraCte: Boolean = false,
-      recursive: Boolean = false, augCte: String = augmentedSql): String = {
-    val sigCols = (0 until 8)
+      recursive: Boolean = false, copies: Int = 2): String = {
+    import Dedup.{NumPerms, RowsPerBand}
+    val sigCols = (0 until NumPerms)
       .map(i => s"list_min(list_transform(shl, s -> substring(md5('${i / 4}|' || s), ${1 + 8 * (i % 4)}, 8))) AS m$i")
       .mkString(",\n    ")
-    val bandRows = (0 until 4)
-      .map(b => s"SELECT doc_id, $b AS band, md5(m${2 * b} || m${2 * b + 1}) AS digest FROM sig")
-      .mkString("\n    UNION ALL ")
-    s"""WITH ${if (recursive) "RECURSIVE " else ""}$augCte,
+    val bandRows = (0 until NumPerms / RowsPerBand).map { b =>
+      val lanes = (0 until RowsPerBand).map(r => s"m${b * RowsPerBand + r}").mkString(" || ")
+      s"SELECT doc_id, $b AS band, md5($lanes) AS digest FROM sig"
+    }.mkString("\n    UNION ALL ")
+    s"""WITH ${if (recursive) "RECURSIVE " else ""}${augmentedSql(copies)},
        |w AS (SELECT doc_id, ${Dedup.wordsSql("text")} AS wl FROM aug),
        |sets AS (SELECT doc_id, list_distinct(${Dedup.shingleListSql("wl")}) AS shl FROM w),
        |sig AS (SELECT doc_id,
@@ -1434,7 +1425,7 @@ object Queries {
          |FROM documents ORDER BY doc_id""".stripMargin,
 
     "dd_exact" ->
-      s"""WITH $augmentedSql
+      s"""WITH ${augmentedSql(2)}
          |SELECT ${TextOps.fingerprintSql("text")} AS fp,
          |  MIN(doc_id) AS keeper, COUNT(*) AS n_copies
          |FROM aug GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY fp""".stripMargin,
@@ -1599,7 +1590,7 @@ object Queries {
         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "dd_stream_exact" ->
-      s"""WITH $augmentedSql,
+      s"""WITH ${augmentedSql(2)},
          |fps AS (SELECT doc_id, ${TextOps.fingerprintSql("text")} AS fp FROM aug)
          |SELECT doc_id, fp FROM (
          |  SELECT doc_id, fp,
@@ -1655,7 +1646,7 @@ object Queries {
          |SELECT g.doc_id, c.dup_of
          |FROM aug g LEFT JOIN cand c ON c.doc_id = g.doc_id
          |ORDER BY g.doc_id""".stripMargin,
-      extraCte = true, augCte = Queries.aug3Sql),
+      extraCte = true, copies = 3),
 
     "q_cap_per_lang" ->
       s"""SELECT doc_id, lang, rk FROM (
@@ -1719,10 +1710,10 @@ object Queries {
          |FROM lined CROSS JOIN blset ORDER BY doc_id""".stripMargin,
 
     "dd_decontam" ->
-      s"""WITH $augmentedSql,
+      s"""WITH ${augmentedSql(2)},
          |bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
          |corp AS (SELECT doc_id, text FROM aug
-         |         WHERE NOT (doc_id < 1000000 AND doc_id % 97 = 0)),
+         |         WHERE NOT (doc_id < $CopyStride AND doc_id % 97 = 0)),
          |cw AS (SELECT doc_id, ${Dedup.wordsSql("text")} AS wl FROM corp),
          |cg AS (SELECT doc_id, unnest(list_distinct(${Dedup.shingleListSql("wl")})) AS g FROM cw),
          |bw AS (SELECT doc_id AS bench_id, ${Dedup.wordsSql("text")} AS wl FROM bench),
@@ -1781,7 +1772,7 @@ object Queries {
 
     "pipe_dataprep" -> {
       val qsql = TextOps.qualitySql.toMap
-      s"""WITH $augmentedSql,
+      s"""WITH ${augmentedSql(2)},
          |fps AS (SELECT doc_id, text, ${TextOps.fingerprintSql("text")} AS fp FROM aug),
          |keep AS (SELECT doc_id, text, fp FROM (
          |    SELECT doc_id, text, fp,
@@ -1815,16 +1806,17 @@ object Queries {
     // `oracleDynamic`.
   )
 
-  /** SRP-bucketed ANN oracle: the 4 hyperplane sign vectors are generated
-    * from the SAME `Similarity.planeSign` the Spark side uses (64 dims in
-    * the driver's embeddings tables). `radius` > 0 = multi-probe (buckets
-    * within that Hamming distance of the query bucket). */
+  /** SRP-bucketed ANN oracle: the `Similarity.SrpPlanes` hyperplane sign
+    * vectors are generated from the SAME `Similarity.planeSign` the Spark
+    * side uses (64 dims in the driver's embeddings tables). `radius` > 0 =
+    * multi-probe (buckets within that Hamming distance of the query
+    * bucket). */
   private def annLshOracle(radius: Int = 0): String = {
     val dims = 64
     def planeLit(p: Int): String =
       (0 until dims).map(d => graft.operators.Similarity.planeSign(p, d))
         .mkString("[", ",", "]")
-    val bucketExpr = (0 until 4).map { p =>
+    val bucketExpr = (0 until graft.operators.Similarity.SrpPlanes).map { p =>
       s"(CASE WHEN list_dot_product(e, ${planeLit(p)}) >= 0 THEN ${1 << p} ELSE 0 END)"
     }.mkString(" + ")
     val pred =

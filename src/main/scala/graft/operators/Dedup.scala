@@ -15,52 +15,108 @@ import org.apache.spark.sql.functions._
   *  - minhash-LSH: signatures are per-doc aggregations over exploded
   *    shingles (shuffle keyed by doc_id = already-clustered), then the
   *    candidate join is keyed by tiny band digests — only colliding buckets
-  *    shuffle together; no quadratic blowup. md5 is used here so the DuckDB
-  *    oracle can reproduce signatures bit-for-bit; prod swaps xxhash64
-  *    (same plan shape, ~10× cheaper hash).
+  *    shuffle together; no quadratic blowup. The hash family is a
+  *    parameter (`Hash`): `Md5` lets the DuckDB oracle reproduce
+  *    signatures bit-for-bit, `Native` is the 64-bit one-pass kernel with
+  *    the same plan shape.
   *  - n-gram Jaccard verifies candidate pairs only (LSH output), never the
   *    full cross product.
   */
 object Dedup {
 
-  /** 3-word shingles of the whitespace-normalized lowercase text.
+  /** The LSH shape and shingle width of every MinHash operator, one
+    * constant each: the Spark operators, the streaming near-dup operator
+    * and the DuckDB oracle SQL in `Queries` all read these, so the band
+    * shape is decided in one place. The native kernels (`shingle_strs`,
+    * `shingle_set`, `md5_minhash_lanes`, `minhash_sigs`) build 3-word
+    * shingles. */
+  val NumPerms = 8
+  val RowsPerBand = 2
+  val ShingleWidth = 3
+
+  /** The hash family of `minhashCandidates`, `jaccardVerified` and
+    * `decontaminate`: every difference between their two paths lives
+    * here, and the plan shape is the same for both.
+    *  - `Md5`: oracle-exact; the DuckDB oracle reproduces every value.
+    *  - `Native`: prod speed, rows-only (the 64-bit base hash is not
+    *    reproducible in DuckDB). A hash collision can only ADD a candidate
+    *    or a shared gram, at odds far below the banding's own error. */
+  sealed trait Hash {
+    /** (id, band, `bandKeys`…) rows, one per doc and band; null keys for
+      * docs with fewer than `ShingleWidth` words. */
+    private[operators] def bandRows(docs: DataFrame, idCol: String, textCol: String): DataFrame
+    private[operators] def bandKeys: Seq[String]
+    /** Per-doc distinct shingle set (empty for < `ShingleWidth` words). */
+    def shingleSet(text: Column): Column
+    /** |A ∩ B| of two `shingleSet`s as a long. */
+    def intersectCount(a: Column, b: Column): Column
+  }
+
+  /** md5-lane signatures (`md5_minhash_lanes`), band rows (band, digest)
+    * from `bandRows`, shingle-string sets, `array_intersect` counts. */
+  case object Md5 extends Hash {
+    private[operators] def bandRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+      Dedup.bandRows(docs, idCol, textCol)
+    private[operators] val bandKeys = Seq("band", "digest")
+    /** Native sorted DISTINCT shingle strings — set-equal to
+      * `array_distinct(shingles(text))` in one fused codegen pass (null
+      * for null text, exactly like the builtin chain; Md5ParitySpec pins
+      * the set equality). Every consumer is order-independent
+      * (`array_intersect` sizes, explode-then-aggregate), so the sorted
+      * order only makes the representation deterministic. */
+    def shingleSet(text: Column): Column = graft.functions.functions.shingleStrs(text)
+    def intersectCount(a: Column, b: Column): Column = size(array_intersect(a, b)).cast("long")
+  }
+
+  /** One-pass seed-mixed signatures (`minhash_sigs`), bands joined on
+    * their raw signature longs (band, m0, m1) with no digest hash, 64-bit
+    * shingle-hash sets (`shingle_set`, ~5-10× smaller than the gram
+    * strings) and a sorted-merge intersect count. */
+  case object Native extends Hash {
+    private val f = graft.functions.functions
+    private[operators] def bandRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+      val sig = docs.select(col(idCol), f.minhashSigs(col(textCol), NumPerms).as("sig"))
+      val bands = (0 until NumPerms / RowsPerBand).map { b =>
+        struct(lit(b).as("band") +: (0 until RowsPerBand).map(r =>
+          col("sig")(b * RowsPerBand + r).as(s"m$r")): _*)
+      }
+      sig.select(col(idCol), explode(array(bands: _*)).as("bd"))
+        .select(col(idCol) +: bandKeys.map(k => col(s"bd.$k")): _*)
+    }
+    private[operators] val bandKeys = "band" +: (0 until RowsPerBand).map(r => s"m$r")
+    def shingleSet(text: Column): Column = f.shingleSet(text)
+    def intersectCount(a: Column, b: Column): Column = f.sortedIntersectCount(a, b)
+  }
+
+  /** `ShingleWidth`-word shingles of the whitespace-normalized lowercase
+    * text.
     *
     * Implementation note (perf): built by zipping the word array with its
-    * own 1- and 2-shifted slices — every subexpression is evaluated once
+    * own 1-, 2-, … shifted slices — every subexpression is evaluated once
     * per row, O(words). The naive `transform(words, (_, i) =>
     * element_at(words, i+k))` form re-evaluates the `split` inside the
     * lambda per element (no CSE across a lambda boundary) → O(words²) per
     * row, which benchmarked 14× slower at sf0.1. `zip_with` pads the
     * shorter side with null and `concat(null) = null`, so the trailing
     * (incomplete) windows drop out via the null filter. */
-  def shingles(text: Column, n: Int = 3): Column = {
-    require(n == 3, "shingles currently built for n=3 (zip-with-shift form)")
+  def shingles(text: Column): Column = {
     val w = split(regexp_replace(lower(trim(text)), " +", " "), " ")
-    val s1 = slice(w, lit(2), greatest(size(w) - 1, lit(0)))
-    val s2 = slice(w, lit(3), greatest(size(w) - 2, lit(0)))
-    val pairs = zip_with(w, s1, (x, y) => concat(x, lit(" "), y))
-    val tris = zip_with(pairs, s2, (xy, z) => concat(xy, lit(" "), z))
-    filter(tris, s => s.isNotNull)
+    val grams = (1 until ShingleWidth).foldLeft(w) { (acc, k) =>
+      zip_with(acc, slice(w, lit(k + 1), greatest(size(w) - k, lit(0))),
+        (x, y) => concat(x, lit(" "), y))
+    }
+    filter(grams, s => s.isNotNull)
   }
-
-  /** Native sorted DISTINCT shingle strings — set-equal to
-    * `array_distinct(shingles(text))` in one fused codegen pass (empty
-    * array for < 3 words, null for null text, exactly like the builtin
-    * chain; Md5ParitySpec pins the set equality). Every consumer is
-    * order-independent (`array_intersect` sizes, explode-then-aggregate),
-    * so the sorted order only makes the representation deterministic. */
-  def shingleSetStrs(text: Column): Column =
-    graft.functions.functions.shingleStrs(text)
 
   /** DuckDB: the words-list expression to bind in a CTE as e.g. `w`. */
   def wordsSql(e: String): String =
     s"string_split(regexp_replace(lower(trim($e)), ' +', ' ', 'g'), ' ')"
 
   /** DuckDB: shingle list over a bound words-list alias (1-based indexing;
-    * `range(1, len-1)` is end-exclusive → starts 1..len-n+1). */
-  def shingleListSql(wordsAlias: String, n: Int = 3): String = {
-    val parts = (0 until n).map(k => s"$wordsAlias[i+$k]").mkString(" || ' ' || ")
-    s"list_transform(range(1, len($wordsAlias) - ${n - 2}), i -> $parts)"
+    * `range(1, len-n+2)` is end-exclusive → starts 1..len-n+1). */
+  def shingleListSql(wordsAlias: String): String = {
+    val parts = (0 until ShingleWidth).map(k => s"$wordsAlias[i+$k]").mkString(" || ' ' || ")
+    s"list_transform(range(1, len($wordsAlias) - ${ShingleWidth - 2}), i -> $parts)"
   }
 
   /** Integer cross-multiplied Jaccard threshold — |A∩B| / |A∪B| ≥ num/den
@@ -93,21 +149,21 @@ object Dedup {
   /** MinHash signature columns: lane i ↦ min over shingles of an md5-derived
     * 32-bit (8-hex-char) slice. Computed per-ROW (no explode, no groupBy,
     * NO SHUFFLE): at 10^12 docs the signature stage is a pure map over the
-    * scan. Docs with < n words get a null signature and drop out of
-    * candidate generation (null never joins).
+    * scan. Docs with < `ShingleWidth` words get a null signature and drop
+    * out of candidate generation (null never joins).
     *
     * Lane scheme (engine-portable → the DuckDB oracle reproduces it
-    * bit-for-bit): each shingle is hashed ceil(numPerms/4) times —
+    * bit-for-bit): each shingle is hashed ceil(NumPerms/4) times —
     * `md5(k + '|' + s)` for k = 0,1,… — and the hex strings concatenated;
-    * lane i is the 8 hex chars at offset 8·i (hash i/4, slice i%4). For the
-    * default 8 lanes that is 2 md5s per shingle instead of the previous
+    * lane i is the 8 hex chars at offset 8·i (hash i/4, slice i%4). For
+    * 8 lanes that is 2 md5s per shingle instead of the previous
     * one-md5-per-permutation (4× less hashing), and the per-element
     * transform builds one string instead of a struct of eight. 32-bit lanes
     * keep the min-collision probability between unrelated docs at ~n/2^33 —
     * negligible next to the banding's own false-positive rate, and all
     * candidates are verified downstream anyway. */
   def minhashSignature(docs: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, keepCols: Seq[String] = Nil): DataFrame = {
+      keepCols: Seq[String] = Nil): DataFrame = {
     // ONE fused native pass per row (md5_minhash_lanes) — value-identical
     // to the previous transform/aggregate HOF construction (Md5ParitySpec
     // pins lane-for-lane equality), but inside whole-stage codegen with a
@@ -120,22 +176,21 @@ object Dedup {
     // two-stage select: the lanes array is computed once; the second
     // select just indexes it
     docs.select(col(idCol) +: keep :+
-        graft.functions.functions.md5MinhashLanes(col(textCol), numPerms).as("sig"): _*)
-      .select(col(idCol) +: keep ++: (0 until numPerms).map(i => col("sig")(i).as(s"m$i")): _*)
+        graft.functions.functions.md5MinhashLanes(col(textCol), NumPerms).as("sig"): _*)
+      .select(col(idCol) +: keep ++: (0 until NumPerms).map(i => col("sig")(i).as(s"m$i")): _*)
   }
 
   /** Exploded LSH band rows (id, band, digest): band b's digest =
-    * md5(m_{2b} || m_{2b+1}). Shared by the self-join candidate path and
+    * md5(m_{2b} || m_{2b+1}) at `RowsPerBand` = 2. The `Md5` band rows, shared by the self-join candidate path and
     * the incremental (index-probe) path. `keepCols` are carried through
     * per band row (the streaming TTL path threads its event-time column
     * this way — a post-hoc join to recover it would be a stream-stream
     * join, which cannot precede the stateful operator). */
   def bandRows(docs: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, rowsPerBand: Int = 2, keepCols: Seq[String] = Nil): DataFrame = {
-    val sig = minhashSignature(docs, idCol, textCol, numPerms, keepCols)
-    val nBands = numPerms / rowsPerBand
-    val bands = (0 until nBands).map { b =>
-      val cols = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}"))
+      keepCols: Seq[String] = Nil): DataFrame = {
+    val sig = minhashSignature(docs, idCol, textCol, keepCols)
+    val bands = (0 until NumPerms / RowsPerBand).map { b =>
+      val cols = (0 until RowsPerBand).map(r => col(s"m${b * RowsPerBand + r}"))
       struct(lit(b).as("band"), md5(concat(cols: _*).cast("binary")).as("digest"))
     }
     val keep = keepCols.map(col)
@@ -205,20 +260,21 @@ object Dedup {
     pairs.distinct()
   }
 
-  /** LSH candidate pairs: docs sharing any band digest are candidates.
-    * Output (id_a < id_b). `maxBucket` > 0 enables the hot-bucket star
-    * guard (see `bandedCandidates`); 0 keeps the exact all-pairs-per-bucket
-    * semantics the DuckDB oracle replays. */
+  /** LSH candidate pairs: docs sharing any band key are candidates.
+    * Output (id_a < id_b). `hash` picks the signature family (see `Hash`).
+    * `maxBucket` > 0 enables the hot-bucket star guard (see
+    * `bandedCandidates`); 0 keeps the exact all-pairs-per-bucket semantics
+    * the DuckDB oracle replays. */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, rowsPerBand: Int = 2, maxBucket: Int = 0): DataFrame = {
+      hash: Hash = Md5, maxBucket: Int = 0): DataFrame = {
     // Explicit shuffle on the band key BEFORE the self-join: both join
     // sides then hang off the identical exchange, which ReuseExchange
     // materializes once — without it Catalyst broadcasts one side and the
-    // whole signature pipeline (2 md5s per shingle) computes twice. The
-    // shuffled rows are tiny (id + band + 32-byte digest).
-    val exploded = bandRows(docs, idCol, textCol, numPerms, rowsPerBand)
-      .repartition(col("band"), col("digest"))
-    bandedCandidates(exploded, idCol, Seq("band", "digest"), maxBucket)
+    // whole signature pipeline computes twice. The shuffled rows are tiny
+    // (id + band + a 32-byte digest or two longs).
+    val exploded = hash.bandRows(docs, idCol, textCol)
+      .repartition(hash.bandKeys.map(col): _*)
+    bandedCandidates(exploded, idCol, hash.bandKeys, maxBucket)
   }
 
   /** Materialize the LSH dedup index of a base corpus — the persistent
@@ -240,14 +296,11 @@ object Dedup {
     * batch's verification touches a candidate-proportional slice of the
     * stored shingle sets instead of rescanning all of them. */
   def buildBandIndex(base: DataFrame, idCol: String, textCol: String,
-      path: String, numPerms: Int = 8, rowsPerBand: Int = 2): Unit = {
-    bandRows(base, idCol, textCol, numPerms, rowsPerBand)
+      path: String): Unit = {
+    bandRows(base, idCol, textCol)
       .write.mode("overwrite").parquet(s"$path/bands")
     // written last: sets/_SUCCESS marks the whole index complete.
-    // shingleSetStrs = native sorted distinct shingles — set-equal to the
-    // previous array_distinct(shingles(...)) (every consumer intersects or
-    // explodes, so element order is immaterial; Md5ParitySpec pins it)
-    base.select(col(idCol), shingleSetStrs(col(textCol)).as("shl"),
+    base.select(col(idCol), Md5.shingleSet(col(textCol)).as("shl"),
         setsBucket(col(idCol)).as("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/sets")
   }
@@ -270,7 +323,7 @@ object Dedup {
     * ids are assumed globally unique across appends (same contract as the
     * ANN index appends). */
   def appendBandIndex(batch: DataFrame, idCol: String, textCol: String,
-      path: String, numPerms: Int = 8, rowsPerBand: Int = 2): Unit = {
+      path: String): Unit = {
     // NOT atomic on a plain filesystem: a crash between the two appends
     // leaves a doc in one table but not the other, and EITHER torn state
     // silently misses that doc's future duplicates (sets-only → no band
@@ -284,9 +337,9 @@ object Dedup {
     // sets/ LAST — "sets complete" remains the index's completeness marker
     // in both code paths, so a crash mid-append leaves the more detectable
     // bands-only torn state rather than silently inverting the convention.
-    bandRows(batch, idCol, textCol, numPerms, rowsPerBand)
+    bandRows(batch, idCol, textCol)
       .write.mode("append").parquet(s"$path/bands")
-    batch.select(col(idCol), shingleSetStrs(col(textCol)).as("shl"),
+    batch.select(col(idCol), Md5.shingleSet(col(textCol)).as("shl"),
         setsBucket(col(idCol)).as("bucket"))
       .write.partitionBy("bucket").mode("append").parquet(s"$path/sets")
   }
@@ -309,10 +362,9 @@ object Dedup {
     * or shuffled-hash join on (band, digest) accordingly; the index is
     * never self-joined and never recomputed. */
   def probeBandIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+      batch: DataFrame, idCol: String, textCol: String): DataFrame = {
     val baseBands = spark.read.parquet(s"$indexPath/bands")
-    val batchBands = bandRows(batch, idCol, textCol, numPerms, rowsPerBand)
+    val batchBands = bandRows(batch, idCol, textCol)
     batchBands.as("n").join(baseBands.as("b"),
         col("n.band") === col("b.band") && col("n.digest") === col("b.digest"))
       .select(col(s"n.$idCol").as("id_new"), col(s"b.$idCol").as("id_base"))
@@ -360,54 +412,8 @@ object Dedup {
       .join(batchSets, "id_new")
       .join(baseSets, "id_base")
       .select(col("id_new"), col("id_base"),
-        size(array_intersect(col("shl_n"), col("shl_b"))).cast("long").as("n_common"),
+        Md5.intersectCount(col("shl_n"), col("shl_b")).as("n_common"),
         size(col("shl_n")).cast("long").as("n_a"),
-        size(col("shl_b")).cast("long").as("n_b"))
-  }
-
-  /** Prod-speed LSH candidates: signatures from the NATIVE one-pass
-    * `minhash_sigs` expression (graft.functions.MinHashKernel — single scan,
-    * seed-mixed permutations, no per-shingle string/md5 machinery), bands
-    * joined on their two raw signature longs (no digest hash needed).
-    * Rows-only vs the oracle by design: the 64-bit base hash is not
-    * reproducible in DuckDB — `minhashCandidates` (md5) is the
-    * parity-checked twin with the identical plan shape. */
-  def minhashCandidatesNative(docs: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, rowsPerBand: Int = 2, maxBucket: Int = 0): DataFrame = {
-    require(rowsPerBand == 2, "native band join built for rowsPerBand=2")
-    val sig = docs.select(col(idCol),
-      graft.functions.functions.minhashSigs(col(textCol), numPerms).as("sig"))
-    val nBands = numPerms / rowsPerBand
-    val bands = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        col("sig")(b * rowsPerBand).as("m0"),
-        col("sig")(b * rowsPerBand + 1).as("m1"))
-    }
-    val exploded = sig
-      .select(col(idCol), explode(array(bands: _*)).as("bd"))
-      .select(col(idCol), col("bd.band"), col("bd.m0"), col("bd.m1"))
-      .repartition(col("band"), col("m0"), col("m1"))
-    bandedCandidates(exploded, idCol, Seq("band", "m0", "m1"), maxBucket)
-  }
-
-  /** Prod-speed two-stage fuzzy dedup, end-to-end native: candidates from
-    * `minhashCandidatesNative`, verification = exact |A∩B| over sorted
-    * shingle-HASH sets via a linear merge (`sorted_intersect_count`) — no
-    * shingle strings, no `array_intersect` set building per pair. Hash
-    * collisions (64-bit) are vanishingly rarer than the MinHash banding's
-    * own false-negative rate. Rows-only vs the oracle (same reason as the
-    * signature path); `ngramJaccardVerified` is the oracle-exact twin. */
-  def jaccardVerifiedNative(docs: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, rowsPerBand: Int = 2, maxBucket: Int = 0): DataFrame = {
-    val cand = minhashCandidatesNative(docs, idCol, textCol, numPerms, rowsPerBand, maxBucket)
-    val sets = docs.select(col(idCol),
-      graft.functions.functions.shingleSet(col(textCol)).as("shl"))
-    cand
-      .join(sets.select(col(idCol).as("id_a"), col("shl").as("shl_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("shl").as("shl_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        graft.functions.functions.sortedIntersectCount(col("shl_a"), col("shl_b")).as("n_common"),
-        size(col("shl_a")).cast("long").as("n_a"),
         size(col("shl_b")).cast("long").as("n_b"))
   }
 
@@ -609,34 +615,15 @@ object Dedup {
     * is a map-side hash probe over its own exploded shingles: no shuffle
     * of corpus n-grams, no corpus self-join; the only exchange is the
     * final per-doc aggregate, and only over rows that HIT the benchmark
-    * (contamination is rare, so that shuffle is tiny). */
+    * (contamination is rare, so that shuffle is tiny). With `hash =
+    * Native` the grams are 64-bit hashes: the broadcast eval-set side
+    * shrinks ~5-10× and the corpus side materializes no per-gram strings;
+    * a collision (~n²/2^65 for an eval suite) can only ADD a spurious
+    * flag, acceptable for a quarantine list with `Md5` as the audit path. */
   def decontaminate(corpus: DataFrame, bench: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val cg = corpus.select(col(idCol),
-      explode(shingleSetStrs(col(textCol))).as("g"))
-    val bg = bench.select(col(idCol).as("bench_id"),
-      explode(shingleSetStrs(col(textCol))).as("g"))
-    cg.join(broadcast(bg), "g")
-      .groupBy(col(idCol))
-      .agg(min(col("bench_id")).as("contaminated_by"),
-        count_distinct(col("g")).as("n_shared"))
-  }
-
-  /** Prod-speed decontamination twin: 64-bit shingle HASHES from the
-    * native one-pass `shingle_set` expression instead of shingle strings —
-    * the broadcast eval-set side shrinks ~5-10× (8 bytes vs whole
-    * n-grams) and the corpus side materializes no per-gram strings.
-    * Hash collisions (~n²/2^65 for an eval suite) can only ADD a spurious
-    * flag — acceptable for a quarantine list, and the exact twin
-    * (`decontaminate`) is the audit path. Rows-only vs the oracle by
-    * construction (the 64-bit hash is not reproducible in DuckDB);
-    * `decontaminate` is the value-exact twin with the identical plan
-    * shape. */
-  def decontaminateFast(corpus: DataFrame, bench: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val f = graft.functions.functions
-    val cg = corpus.select(col(idCol), explode(f.shingleSet(col(textCol))).as("g"))
-    val bg = bench.select(col(idCol).as("bench_id"), explode(f.shingleSet(col(textCol))).as("g"))
+      idCol: String, textCol: String, hash: Hash = Md5): DataFrame = {
+    val cg = corpus.select(col(idCol), explode(hash.shingleSet(col(textCol))).as("g"))
+    val bg = bench.select(col(idCol).as("bench_id"), explode(hash.shingleSet(col(textCol))).as("g"))
     cg.join(broadcast(bg), "g")
       .groupBy(col(idCol))
       .agg(min(col("bench_id")).as("contaminated_by"),
@@ -645,19 +632,19 @@ object Dedup {
 
   /** N-gram Jaccard verification over the LSH candidate pairs ONLY — the
     * scale-correct two-stage dedup (candidates from `minhashCandidates`,
-    * exact |A∩B| via `array_intersect` on the per-doc shingle sets). Exact
-    * integer counts (n_common, n_a, n_b) so the threshold can be applied by
-    * integer cross-multiplication with no float parity risk. Never touches
-    * the quadratic all-pairs space. */
-  def ngramJaccardVerified(docs: DataFrame, idCol: String, textCol: String,
-      numPerms: Int = 8, rowsPerBand: Int = 2, maxBucket: Int = 0): DataFrame = {
-    val cand = minhashCandidates(docs, idCol, textCol, numPerms, rowsPerBand, maxBucket)
-    val sets = docs.select(col(idCol), shingleSetStrs(col(textCol)).as("shl"))
+    * exact |A∩B| of the per-doc shingle sets of the same `hash` family).
+    * Exact integer counts (n_common, n_a, n_b) so the threshold can be
+    * applied by integer cross-multiplication with no float parity risk.
+    * Never touches the quadratic all-pairs space. */
+  def jaccardVerified(docs: DataFrame, idCol: String, textCol: String,
+      hash: Hash = Md5, maxBucket: Int = 0): DataFrame = {
+    val cand = minhashCandidates(docs, idCol, textCol, hash, maxBucket)
+    val sets = docs.select(col(idCol), hash.shingleSet(col(textCol)).as("shl"))
     cand
       .join(sets.select(col(idCol).as("id_a"), col("shl").as("shl_a")), "id_a")
       .join(sets.select(col(idCol).as("id_b"), col("shl").as("shl_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("shl_a"), col("shl_b"))).cast("long").as("n_common"),
+        hash.intersectCount(col("shl_a"), col("shl_b")).as("n_common"),
         size(col("shl_a")).cast("long").as("n_a"),
         size(col("shl_b")).cast("long").as("n_b"))
   }

@@ -11,13 +11,14 @@ import org.apache.spark.sql.functions._
   *    pass over the table, no shuffle except the final top-k (planned as
   *    partial + final TakeOrdered). The baseline.
   *  - `lshBucketedTopK`: sign-random-projection LSH — each vector lands in a
-  *    2^p bucket keyed by the signs of p fixed pseudo-random hyperplanes
-  *    (hash-derived, deterministic); search scans only the query's bucket.
+  *    2^p bucket keyed by the signs of p = `SrpPlanes` fixed pseudo-random
+  *    hyperplanes (hash-derived, deterministic); search scans only the
+  *    query's bucket.
   *  - `buildSrpIndex` / `lshIndexedTopK`: the MATERIALIZED scale path — the
   *    table written `partitionBy(bucket)`, so the bucket filter becomes
   *    directory-level partition pruning (asserted in PlanSpec): at 10^12
   *    rows the query touches 1/2^p of the files instead of filtering a
-  *    full scan.
+  *    full scan; `radius` > 0 multi-probes the Hamming neighbours.
   *  - `kmeansCentroids` + `ivfTopK` / `buildIvfIndex` / `ivfTopKIndexed`:
   *    IVF — coarse quantizer trained with local Lloyd's on a DETERMINISTIC
   *    bounded sample (hash-ordered top-N: one distributed TakeOrdered scan,
@@ -31,10 +32,16 @@ import org.apache.spark.sql.functions._
   *    recall at near-dup similarity (cos ≥ 0.9) is ≥ 0.98 with the default
   *    8 bands × 6 bits; no block is ever all-pairs.
   *
-  * Dot products run inside codegen via `aggregate`/`zip_with` on the array
-  * column (doubles, sequential fold — deterministic).
+  * Dot products run inside codegen as native primitive loops (`dot_f`,
+  * `plane_dots`, `cluster_dists`: doubles, ascending-element fold —
+  * deterministic). Every top-k goes through one body, `topKInBucket`.
   */
 object Similarity {
+
+  /** SRP hyperplanes per bucket id (2^SrpPlanes buckets) — the one shape
+    * constant the Spark operators and the DuckDB oracle SQL in `Queries`
+    * both read. */
+  val SrpPlanes = 4
 
   /** dot(embedding, q) via the native primitive-loop dot_f — bit-identical
     * to the previous aggregate(zip_with(...)) fold (same float→double
@@ -44,29 +51,24 @@ object Similarity {
     graft.functions.functions.dotf(emb, array(q.map(lit): _*))
 
   /** Exact top-k by dot product (embeddings are ~unit-norm → cosine).
-    * Deterministic tie-break by id. */
+    * Deterministic tie-break by id. The `lit(true)` filter is removed by
+    * the optimizer (PruneFilters), so the plan stays scan → partial +
+    * final TakeOrdered. */
   def bruteForceTopK(embeddings: DataFrame, idCol: String, embCol: String,
-      q: Seq[Float], k: Int): DataFrame = {
-    embeddings
-      .select(col(idCol), dotCol(col(embCol), q).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col(idCol))))
-      .select(col("rank"), col(idCol))
-  }
+      q: Seq[Float], k: Int): DataFrame =
+    topKInBucket(embeddings, idCol, embCol, q, k, lit(true))
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * in {-1, +1} from the fixture hash (no RNG state). */
   def planeSign(plane: Int, dim: Int): Double =
     if ((graft.core.Hash64(s"srp|$plane|$dim") & 1L) == 0L) -1.0 else 1.0
 
-  /** Sign-random-projection bucket id (p bits) for an embedding column —
-    * sign tests over the native one-pass plane_dots (bit-exact dots; see
-    * planeDots). */
-  def srpBucket(emb: Column, p: Int, dims: Int): Column = {
-    val dots = graft.functions.VecOps.planeDots(emb, p, dims)
-    val bits = (0 until p).map { plane =>
+  /** Sign-random-projection bucket id (`SrpPlanes` bits) for an embedding
+    * column — sign tests over the native one-pass plane_dots (bit-exact
+    * dots; see planeDots). */
+  def srpBucket(emb: Column, dims: Int): Column = {
+    val dots = graft.functions.VecOps.planeDots(emb, SrpPlanes, dims)
+    val bits = (0 until SrpPlanes).map { plane =>
       when(dots(plane) >= 0, lit(1 << plane)).otherwise(lit(0))
     }
     bits.reduce(_ + _)
@@ -74,9 +76,9 @@ object Similarity {
 
   /** The query vector's SRP bucket, computed driver-side from the same
     * plane constants. */
-  def srpBucketOf(q: Seq[Float], p: Int): Int = {
+  def srpBucketOf(q: Seq[Float]): Int = {
     var b = 0
-    for (plane <- 0 until p) {
+    for (plane <- 0 until SrpPlanes) {
       var dot = 0.0
       for (d <- q.indices) dot += q(d).toDouble * planeSign(plane, d)
       if (dot >= 0) b |= (1 << plane)
@@ -89,16 +91,12 @@ object Similarity {
     * materialized index this still scans everything and filters — use
     * `buildSrpIndex` + `lshIndexedTopK` for the pruned path. */
   def lshBucketedTopK(embeddings: DataFrame, idCol: String, embCol: String,
-      q: Seq[Float], k: Int, p: Int = 4): DataFrame = {
+      q: Seq[Float], k: Int): DataFrame = {
     val withBucket = embeddings
-      .withColumn("bucket", srpBucket(col(embCol), p, q.length))
-    topKInBucket(withBucket, idCol, embCol, q, k, col("bucket") === srpBucketOf(q, p))
+      .withColumn("bucket", srpBucket(col(embCol), q.length))
+    topKInBucket(withBucket, idCol, embCol, q, k, col("bucket") === srpBucketOf(q))
   }
 
-  /** Materialize the SRP index: table rewritten `partitionBy(bucket)` so a
-    * bucket-filtered read prunes to 1/2^p of the files (directory-level —
-    * no data pages of other buckets are even opened). One full scan + one
-    * shuffle-free write; amortized over every subsequent query. */
   /** Symmetric int8 quantization of an embedding column — the standard
     * 4× storage/bandwidth cut an embedding store applies before ANN
     * serving (scale = max |x|, codes = round(x/scale·127)). A pure
@@ -138,10 +136,15 @@ object Similarity {
        |  CAST(len(list_filter(codes, x -> abs(x) = 127)) AS BIGINT) AS n_saturated
        |FROM c ORDER BY $idCol""".stripMargin
 
+  /** Materialize the SRP index: table rewritten `partitionBy(bucket)` so a
+    * bucket-filtered read prunes to 1/2^SrpPlanes of the files
+    * (directory-level — no data pages of other buckets are even opened).
+    * One full scan + one shuffle-free write; amortized over every
+    * subsequent query. */
   def buildSrpIndex(embeddings: DataFrame, idCol: String, embCol: String,
-      path: String, p: Int = 4, dims: Int = 64): Unit = {
+      path: String, dims: Int = 64): Unit = {
     embeddings
-      .withColumn("bucket", srpBucket(col(embCol), p, dims))
+      .withColumn("bucket", srpBucket(col(embCol), dims))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
   }
 
@@ -155,42 +158,32 @@ object Similarity {
     * rows land exactly where a fresh rebuild would put them — indexed
     * search over base+appends equals a rebuild (OperatorSpec asserts). */
   def appendSrpIndex(newRows: DataFrame, idCol: String, embCol: String,
-      path: String, p: Int = 4, dims: Int = 64): Unit = {
+      path: String, dims: Int = 64): Unit = {
     newRows
-      .withColumn("bucket", srpBucket(col(embCol), p, dims))
+      .withColumn("bucket", srpBucket(col(embCol), dims))
       .write.mode("append").partitionBy("bucket").parquet(path)
-  }
-
-  /** ANN over the materialized SRP index: the `bucket = ?` predicate is a
-    * partition filter (PlanSpec asserts the scan's PartitionFilters), so
-    * only the query bucket's files are read. Same output as
-    * `lshBucketedTopK` on the source table. */
-  def lshIndexedTopK(spark: SparkSession, indexPath: String, idCol: String,
-      embCol: String, q: Seq[Float], k: Int, p: Int = 4): DataFrame = {
-    val idx = spark.read.parquet(indexPath)
-    topKInBucket(idx, idCol, embCol, q, k, col("bucket") === srpBucketOf(q, p))
   }
 
   /** Multi-probe: buckets within Hamming distance ≤ `radius` of the query
     * bucket (ascending). Radius 1 probes p+1 of the 2^p buckets — the
     * standard LSH recall/pruning dial: a near neighbor differing on ONE
     * marginal hyperplane sign is recovered while the scan still prunes
-    * (p+1)/2^p of the partitions. */
-  def probeBuckets(q: Seq[Float], p: Int, radius: Int): Seq[Int] = {
-    val base = srpBucketOf(q, p)
-    (0 until (1 << p)).filter(b => Integer.bitCount(b ^ base) <= radius)
+    * (p+1)/2^p of the partitions. Radius 0 is the query bucket alone. */
+  def probeBuckets(q: Seq[Float], radius: Int): Seq[Int] = {
+    val base = srpBucketOf(q)
+    (0 until (1 << SrpPlanes)).filter(b => Integer.bitCount(b ^ base) <= radius)
   }
 
-  /** Multi-probe ANN over the materialized SRP index: `bucket IN (probes)`
-    * stays a partition filter. Same rank-by-dot output, wider candidate
-    * set than `lshIndexedTopK`. */
-  def lshIndexedTopKMultiProbe(spark: SparkSession, indexPath: String,
-      idCol: String, embCol: String, q: Seq[Float], k: Int, p: Int = 4,
-      radius: Int = 1): DataFrame = {
-    val probes = probeBuckets(q, p, radius)
+  /** ANN over the materialized SRP index, reading only the `probeBuckets`
+    * partitions: `bucket IN (probes)` is a partition filter (PlanSpec
+    * asserts the scan's PartitionFilters). At `radius` 0 the optimizer
+    * turns the one-element IN into `bucket = N`, and the output equals
+    * `lshBucketedTopK` on the source table; a wider radius is the same
+    * rank-by-dot output over a wider candidate set. */
+  def lshIndexedTopK(spark: SparkSession, indexPath: String, idCol: String,
+      embCol: String, q: Seq[Float], k: Int, radius: Int = 0): DataFrame =
     topKInBucket(spark.read.parquet(indexPath), idCol, embCol, q, k,
-      col("bucket").isin(probes.map(Integer.valueOf): _*))
-  }
+      col("bucket").isin(probeBuckets(q, radius).map(Integer.valueOf): _*))
 
   private def topKInBucket(df: DataFrame, idCol: String, embCol: String,
       q: Seq[Float], k: Int, pred: Column): DataFrame =

@@ -22,9 +22,7 @@ final case class Io(format: String = "parquet") {
 
   def readDocs(spark: SparkSession, location: String): Dataset[Doc] = {
     import spark.implicits._
-    val df =
-      if (format == "iceberg") spark.read.format("iceberg").load(location)
-      else spark.read.format(format).load(location)
+    val df = spark.read.format(format).load(location)
     validate(df)
     df.select("doc_id", "spans").as[Doc]
   }

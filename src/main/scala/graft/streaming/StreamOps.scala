@@ -125,7 +125,7 @@ object StreamOps {
   }
 
   /** Streaming NEAR-dup candidate detection — the continuous-ingest form of
-    * minhash-LSH banding (`Dedup.bandRows`, default bands): keyed by
+    * minhash-LSH banding (`Dedup.bandRows`, pinned band shape): keyed by
     * (band, digest), state = the smallest doc_id seen for that digest;
     * every arriving band row whose digest was already seen by a smaller id
     * (inside the TTL window, when `ttl` is set) emits (doc_id, base = that

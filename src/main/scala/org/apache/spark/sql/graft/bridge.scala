@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -11,4 +11,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `df`'s analyzed plan as a DataFrame of session `s`
+    * (`classic.Dataset.ofRows` is `private[sql]` too). */
+  def inSession(s: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 }

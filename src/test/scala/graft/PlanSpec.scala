@@ -132,6 +132,39 @@ class PlanSpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
+  test("SRP multi-probe: radius 1 prunes to SrpPlanes + 1 buckets, radius 0 to bucket = N") {
+    import graft.operators.Similarity
+    val tmp = java.nio.file.Files.createTempDirectory("graft-srpprobe").toString
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    Similarity.buildSrpIndex(emb, "vec_id", "embedding", s"$tmp/srp")
+    val q = emb.orderBy(col("vec_id")).select(col("embedding")).head().getSeq[Float](0)
+    def partitionFilters(radius: Int): String = {
+      val df = Similarity.lshIndexedTopK(spark, s"$tmp/srp", "vec_id", "embedding", q, 10,
+        radius = radius)
+      val plan = df.queryExecution.executedPlan.toString
+      plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse(s"no scan:\n$plan")
+    }
+    val probe = partitionFilters(1)
+    val in = """bucket#\d+ IN \(([^)]*)\)""".r.findFirstMatchIn(probe)
+    assert(in.isDefined, s"radius 1: no literal bucket IN partition filter: $probe")
+    val literals = in.get.group(1).split(",").map(_.trim.toInt).toSet
+    assert(literals.size == Similarity.SrpPlanes + 1 && literals.size == 5,
+      s"radius 1 must probe SrpPlanes + 1 buckets: $probe")
+    assert(literals.contains(Similarity.srpBucketOf(q)))
+    val single = partitionFilters(0)
+    assert(s"""\\(bucket#\\d+ = ${Similarity.srpBucketOf(q)}\\)""".r.findFirstIn(single).isDefined,
+      s"radius 0: the one-element IN must plan as bucket = N: $single")
+  }
+
+  test("ann_topk: the lit(true) bucket filter is pruned — scan, then TakeOrdered") {
+    val df = Queries.all("ann_topk")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrdered"), s"top-k lost its TakeOrdered:\n$plan")
+    assert(!plan.linesIterator.exists(_.trim.matches("""[+:\- *()\d]*Filter .*""")),
+      s"a Filter survived in the brute-force top-k:\n$plan")
+  }
+
   test("materialized IVF index: probed clusters prune partitions") {
     import graft.operators.Similarity
     val tmp = java.nio.file.Files.createTempDirectory("graft-ivfidx").toString

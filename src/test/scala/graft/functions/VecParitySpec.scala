@@ -51,7 +51,7 @@ class VecParitySpec extends AnyFunSuite {
   }
 
   test("srpBucket over plane_dots == per-plane fold buckets") {
-    val p = 4
+    val p = graft.operators.Similarity.SrpPlanes
     val builtinBits = (0 until p).map { plane =>
       val planeVec = array((0 until dims).map(d =>
         lit(graft.operators.Similarity.planeSign(plane, d))): _*)
@@ -61,7 +61,7 @@ class VecParitySpec extends AnyFunSuite {
       when(dot >= 0, lit(1 << plane)).otherwise(lit(0))
     }
     compare("srpBucket",
-      graft.operators.Similarity.srpBucket(col("v"), p, dims),
+      graft.operators.Similarity.srpBucket(col("v"), dims),
       builtinBits.reduce(_ + _))
   }
 

@@ -44,7 +44,7 @@ class DedupGuardSpec extends AnyFunSuite {
 
   test("hot bucket: native path guard yields O(n) candidates too") {
     val n = 500
-    val c = Dedup.minhashCandidatesNative(hotCorpus(n), "doc_id", "text",
+    val c = Dedup.minhashCandidates(hotCorpus(n), "doc_id", "text", Dedup.Native,
       maxBucket = 16).count()
     assert(c < 700L, s"guarded native candidate count $c is not O(n)")
   }
@@ -79,7 +79,7 @@ class DedupGuardSpec extends AnyFunSuite {
       val cand = Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = guarded)
         .filter(col("id_a") < 1000L || col("id_b") < 1000L)
       assert(cand.count() == 0L, s"maxBucket=$guarded paired shingle-less docs")
-      val candN = Dedup.minhashCandidatesNative(docs, "doc_id", "text", maxBucket = guarded)
+      val candN = Dedup.minhashCandidates(docs, "doc_id", "text", Dedup.Native, maxBucket = guarded)
         .filter(col("id_a") < 1000L || col("id_b") < 1000L)
       assert(candN.count() == 0L, s"native maxBucket=$guarded paired shingle-less docs")
     }
@@ -127,7 +127,7 @@ class DedupGuardSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"), col("source"))
     val aug = d.unionAll(d.select(col("doc_id") + lit(1000000L), col("text"),
       col("source"))).toDF("doc_id", "text", "source")
-    val ver = Dedup.ngramJaccardVerified(aug, "doc_id", "text")
+    val ver = Dedup.jaccardVerified(aug, "doc_id", "text")
       .filter(Dedup.jaccardAtLeast(col("n_common"), col("n_a"), col("n_b")))
     val losers = Dedup.connectedComponents(ver, "id_a", "id_b")
       .filter(col("id") =!= col("component"))
@@ -155,7 +155,7 @@ class DedupGuardSpec extends AnyFunSuite {
     def collectRes(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val exact = collectRes(Dedup.decontaminate(corpus, bench, "doc_id", "text"))
-    val fast = collectRes(Dedup.decontaminateFast(corpus, bench, "doc_id", "text"))
+    val fast = collectRes(Dedup.decontaminate(corpus, bench, "doc_id", "text", Dedup.Native))
     assert(fast == exact) // 64-bit collisions impossible at this gram count
     assert(exact.nonEmpty, "test corpus must actually contaminate")
   }

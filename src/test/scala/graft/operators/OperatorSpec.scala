@@ -41,7 +41,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("native minhash candidates: exact dups always pair, unrelated never; null for <3 words") {
     import spark.implicits._
-    val cand = Dedup.minhashCandidatesNative(corpus, "doc_id", "text")
+    val cand = Dedup.minhashCandidates(corpus, "doc_id", "text", Dedup.Native)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand.contains((1L, 2L)), s"exact dup pair missing: $cand")
     assert(!cand.contains((1L, 4L)) && !cand.contains((2L, 4L)), s"false pair: $cand")
@@ -54,9 +54,9 @@ class OperatorSpec extends AnyFunSuite {
 
   test("native jaccard verify agrees with the HOF twin on overlap counts") {
     import spark.implicits._
-    val native = Dedup.jaccardVerifiedNative(corpus, "doc_id", "text")
+    val native = Dedup.jaccardVerified(corpus, "doc_id", "text", Dedup.Native)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val hof = Dedup.ngramJaccardVerified(corpus, "doc_id", "text")
+    val hof = Dedup.jaccardVerified(corpus, "doc_id", "text")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // candidate sets may differ (different hash families) but any pair both
     // surface must carry IDENTICAL exact counts — the verify math is the
@@ -307,7 +307,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("jaccard verification: identical docs = full overlap, near-dups partial") {
-    val rows = Dedup.ngramJaccardVerified(corpus, "doc_id", "text")
+    val rows = Dedup.jaccardVerified(corpus, "doc_id", "text")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     val (c12, a12, b12) = rows((1L, 2L))
     assert(c12 == a12 && a12 == b12, "identical docs must fully overlap")
@@ -342,7 +342,7 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     val v = Array.tabulate(8)(i => if (i % 2 == 0) 1.0f else -1.0f)
     val vecs = Seq((0L, v), (1L, v), (2L, v.map(-_))).toDF("vec_id", "embedding")
-    val b = vecs.select(col("vec_id"), Similarity.srpBucket(col("embedding"), 4, 8).as("b"))
+    val b = vecs.select(col("vec_id"), Similarity.srpBucket(col("embedding"), 8).as("b"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(b(0L) == b(1L))
     val found = Similarity.lshBucketedTopK(vecs, "vec_id", "embedding", v.toSeq, 5)

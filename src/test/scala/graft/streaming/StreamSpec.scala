@@ -127,6 +127,30 @@ class StreamSpec extends AnyFunSuite {
     assert(sinks.isEmpty, s"leaked memory-sink views: ${sinks.mkString(", ")}")
   }
 
+  test("dd_stream_exact never changes the caller's shuffle partitions while it runs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-conf").toString
+    Seq((1L, "alpha beta gamma", "web"), (2L, "delta epsilon", "web"), (3L, "zeta", "pdf"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$dir/documents.parquet")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val polls = new java.util.concurrent.atomic.AtomicLong()
+    @volatile var running = true
+    // a concurrent query on the same session: it must only ever see the
+    // value its session was given, never the stream harness's own count
+    val poller = new Thread(() => while (running) {
+      seen.add(spark.conf.get(key)); polls.incrementAndGet(); Thread.sleep(1)
+    })
+    spark.conf.set(key, "3")
+    poller.start()
+    val rows = try Queries.all("dd_stream_exact")(spark, dir).collect().length
+    finally { running = false; poller.join(); spark.conf.set(key, saved) }
+    assert(rows == 3)
+    assert(polls.get() > 0, "the poller never ran")
+    assert(seen.toArray.toSet == Set("3"), s"the caller's session saw $seen")
+  }
+
   test("streaming dedup: first doc per fingerprint wins, across micro-batches") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
